@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -98,10 +100,9 @@ object ExtQueries22 {
       return flagsOut(s.emptyDataset[Sampling.FlagRow].toDF())
     }
     // cogroups sized to per-window volume, like the batch loop
-    val loopParts = Sampling.windowLoopParts(s, nRows, nWindows)
-    var itemState = s.emptyDataset[Sampling.ItemCount]
-    var userState = s.emptyDataset[Sampling.UserState]
-    val batches = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val state = new Sampling.WindowState(s.sparkContext,
+      new HashPartitioner(Sampling.windowLoopParts(s, nRows, nWindows)))
+    val batches = scala.collection.mutable.ArrayBuffer[RDD[Sampling.FlagRow]]()
     val q = StreamingOps.eventsStream(s, stageDir, glob = "*.parquet")
       .writeStream
       .outputMode(OutputMode.Update())
@@ -110,13 +111,8 @@ object ExtQueries22 {
         val evs = b.select(col("user").cast("int").as("user"),
           col("item").cast("int").as("item"),
           unix_millis(col("ts")).as("ts")).as[Sampling.Interaction]
-        val (flags, is, us) = Sampling.processWindowFlags(
-          evs, itemState, userState, FMax, kMax = 0, Seed, batchId, loopParts)
-        itemState = is
-        userState = us
-        // result-sized (one row per interaction in the file); checkpoint
-        // cuts lineage back to the window step's own checkpoint
-        batches += flags.toDF().localCheckpoint(true)
+        // one job per microbatch; the flags come back cached
+        batches += Sampling.processWindowFlags(state, evs, FMax, kMax = 0, Seed, batchId)
         ()
       }
       .start()
@@ -124,7 +120,7 @@ object ExtQueries22 {
     require(batches.size == nWindows,
       s"stream_item_cut_refunds: $nWindows staged files must drain as " +
         s"$nWindows microbatches (one window each), saw ${batches.size}")
-    flagsOut(batches.reduce(_ unionAll _))
+    flagsOut(s.createDataset(s.sparkContext.union(batches.toSeq)).toDF())
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,9 +1,13 @@
 package graft.operators
 
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
 /**
  * Sampling-mode co-occurrence: the reference's two "interaction cuts" that
@@ -342,116 +346,78 @@ object Sampling {
   }
 
   /**
-   * One window/microbatch step at the Dataset boundary: item-cut cogroup
-   * (shuffle by item), user reservoir cogroup (shuffle by user), refunds
-   * folded into item counts for the next step. Used by the streaming
-   * foreachBatch shell (StreamingCooc); the batch loop drives the shared
-   * windowStepRdd directly with co-partitioned state.
+   * Cross-window keyed state for [[windowStepRdd]]: item counts and user
+   * reservoirs, both partitioned by `part`. Each step reads them as
+   * narrow dependencies, so the window's events are its only real
+   * shuffle — the state lives with its key and never moves, as in the
+   * reference's keyed operator state
+   * (UserInteractionCounterOneInputStreamOperator). Refunds are the one
+   * cross-keyspace flow (user -> item, the reference's feedback edge) and
+   * fold into the next window's item counts through a tiny |items|-row
+   * reduceByKey.
    *
-   * EXACTLY ONE materialization job per window: the item stage's new
-   * per-item counts are routed THROUGH the user-stage cogroup as
-   * passthrough rows under tag-bit synthetic keys, so the single RDD
-   * localCheckpoint of the user-stage output captures the whole window —
-   * flagged-event fold, netted deltas, refunds, user state AND item
-   * state. Everything downstream (delta aggregation, both state tables
-   * for the next window) derives LAZILY from that one checkpoint with
-   * depth-1 plans, so lineage never chains across windows (chaining lazy
-   * Catalyst cogroups grows tree-shaped plans exponentially; per-window
-   * checkpoints keep every plan shallow, the same reason ALS checkpoints
-   * its iterations).
+   * Job contract of [[step]]: EXACTLY ONE Spark job per window. That job
+   * localCheckpoints the step output and caches the part of it the caller
+   * keeps (a delta increment, flag rows). The item counts ride through
+   * the user stage, so that one checkpoint holds the whole window, and
+   * the next window's state derives lazily from it: lineage never chains
+   * across windows.
+   * The previous step output is released once the next step's job has
+   * consumed it: N steps hold N kept RDDs plus the latest step output.
    */
-  def processWindow(evW: Dataset[Interaction], itemState: Dataset[ItemCount],
-      userState: Dataset[UserState], fMax: Int, kMax: Int, seed: Long, w: Long,
-      metrics: Option[PipelineMetrics] = None)
-      : (Dataset[CoocDelta], Dataset[ItemCount], Dataset[UserState]) = {
-    val spark = evW.sparkSession
-    import spark.implicits._
-    val (userOut, newItemState, newUserState) =
-      windowStepDs(evW, itemState, userState, fMax, kMax, seed, w, metrics, emitFlags = false)
+  final class WindowState(sc: SparkContext, private[graft] val part: HashPartitioner) {
+    private[graft] var itemCnt: RDD[(Long, Int)] =
+      sc.parallelize(Seq.empty[(Long, Int)], part.numPartitions).partitionBy(part)
+    private[graft] var userSt: RDD[(Long, (Int, Array[Int]))] =
+      sc.parallelize(Seq.empty[(Long, (Int, Array[Int]))], part.numPartitions).partitionBy(part)
+    private var lastOut: RDD[(Long, UserStageRow)] = null
 
-    // Aggregate the window's deltas lazily over the checkpointed output —
-    // the reference's windowed map-agg (#11, ItemRowAggregator): consumers
-    // only ever see per-window NET deltas (windowStepRdd already netted
-    // per user; this nets across users).
-    val deltas = userOut.filter(_.kind == 0)
-      .select(col("item"), col("other"), col("inc"))
-      .groupBy(col("item"), col("other"))
-      .agg(sum(col("inc")).cast("int").as("inc"))
-      .where(col("inc") =!= 0)
-      .as[CoocDelta]
+    /** The window's step output over the current state (lazy). The state
+      * advances to read from it: user reservoirs narrow (partitioner
+      * kept), item counts net of refunds re-keyed by item. */
+    private[Sampling] def advance(evByItem: RDD[(Long, Interaction)], fMax: Int, kMax: Int,
+        seed: Long, w: Long, metrics: Option[PipelineMetrics],
+        emitFlags: Boolean): RDD[(Long, UserStageRow)] = {
+      val out = windowStepRdd(evByItem, itemCnt, userSt, part, fMax, kMax, seed, w, metrics,
+        emitFlags)
+      itemCnt = out.flatMap { case (_, r) =>
+        if (r.kind == 3) Iterator.single((r.item.toLong, r.inc))
+        else if (r.kind == 1) Iterator.single((r.item.toLong, -1))
+        else Iterator.empty
+      }.reduceByKey(part, _ + _)
+      userSt = out.filter(_._2.kind == 2).mapValues(r => (r.total, r.history))
+      out
+    }
 
-    (deltas, newItemState, newUserState)
+    /** Run window `w` over `ev` in one job; returns what `keep` reads off
+      * the step output, cached. */
+    def step[T: ClassTag](ev: Dataset[Interaction], fMax: Int, kMax: Int, seed: Long, w: Long,
+        metrics: Option[PipelineMetrics] = None, emitFlags: Boolean = false)
+        (keep: RDD[(Long, UserStageRow)] => RDD[T]): RDD[T] = {
+      val out = advance(ev.rdd.map(e => (e.item.toLong, e)), fMax, kMax, seed, w, metrics,
+        emitFlags).localCheckpoint()
+      val kept = keep(out).persist(StorageLevel.MEMORY_AND_DISK)
+      // the ONE job: `kept` carries no checkpoint of its own, so the job's
+      // checkpoint pass reaches `out` and truncates its lineage
+      kept.count()
+      if (lastOut != null) lastOut.unpersist(blocking = false)
+      lastOut = out
+      kept
+    }
   }
 
   /**
-   * processWindow variant exposing the item stage's OBSERVABLE output —
+   * One window's OBSERVABLE item-stage output through [[WindowState.step]]:
    * per-interaction sample flags, with refunds from prior windows already
    * folded into the counts (reference operator #6's output stream,
-   * ItemInteractionCounterTwoInputStreamOperator.java:129-139). Same
-   * single-job window step; only what is read off the checkpoint differs.
+   * ItemInteractionCounterTwoInputStreamOperator.java:129-139).
    */
-  def processWindowFlags(evW: Dataset[Interaction], itemState: Dataset[ItemCount],
-      userState: Dataset[UserState], fMax: Int, kMax: Int, seed: Long, w: Long,
-      numParts: Int = -1)
-      : (Dataset[FlagRow], Dataset[ItemCount], Dataset[UserState]) = {
-    val spark = evW.sparkSession
-    import spark.implicits._
-    val (userOut, newItemState, newUserState) =
-      windowStepDs(evW, itemState, userState, fMax, kMax, seed, w, None,
-        emitFlags = true, numParts = numParts)
-    val flags = userOut.filter(r => r.kind == 4 || r.kind == 5)
-      .map(r => FlagRow(w, r.user, r.item, r.ts, r.kind == 4))
-    (flags, newItemState, newUserState)
-  }
-
-  /** Shared Dataset-boundary window step: run windowStepRdd once (the ONE
-    * eager job of the window), return the checkpointed user-stage output
-    * plus the two next-window state tables derived lazily from it. */
-  private def windowStepDs(evW: Dataset[Interaction], itemState: Dataset[ItemCount],
-      userState: Dataset[UserState], fMax: Int, kMax: Int, seed: Long, w: Long,
-      metrics: Option[PipelineMetrics], emitFlags: Boolean,
-      numParts: Int = -1)
-      : (Dataset[UserStageRow], Dataset[ItemCount], Dataset[UserState]) = {
-    val spark = evW.sparkSession
-    import spark.implicits._
-
-    // Dataset boundary -> the shared RDD window step (windowStepRdd owns
-    // fold order, RNG keying, and the tag-bit passthrough routing). At
-    // this single-shot boundary the state sides carry no partitioner, so
-    // the cogroups shuffle them once — the batch loop is where the
-    // co-partitioning pays off across windows. numParts lets window-loop
-    // callers size the cogroups to per-window volume (the same
-    // rows-per-partition rule as sampledCoocDeltas) instead of paying
-    // the session default's per-partition overhead on tiny windows.
-    val parts =
-      if (numParts > 0) numParts
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val evByItem = evW.rdd.map(e => (e.item.toLong, e))
-    val itemCnt = itemState.rdd.map(c => (c.item.toLong, c.cnt))
-    val userSt = userState.rdd.map(u => (u.user.toLong, (u.total, u.history)))
-    val userOutR = windowStepRdd(evByItem, itemCnt, userSt, part,
-      fMax, kMax, seed, w, metrics, emitFlags).localCheckpoint()
-    userOutR.count() // the ONE eager job of the window
-    val userOut = spark.createDataset(userOutR.map(_._2))
-
-    val newUserState = userOut.filter(_.kind == 2)
-      .map(r => UserState(r.user, r.total, r.history))
-
-    // --- refunds: re-open item slots before the next window (lazy over
-    // the checkpoint; the next window's own job materializes it) ---
-    val itemStateAfterCut = userOut.filter(_.kind == 3)
-      .map(r => ItemCount(r.item, r.inc))
-    val refundCounts = userOut.filter(_.kind == 1)
-      .groupByKey(_.item).count()
-      .map { case (item, n) => ItemCount(item, -n.toInt) }
-    val newItemState = itemStateAfterCut.union(refundCounts)
-      .groupByKey(_.item)
-      .reduceGroups((a, b) => ItemCount(a.item, a.cnt + b.cnt))
-      .map(_._2)
-
-    (userOut, newItemState, newUserState)
-  }
+  def processWindowFlags(state: WindowState, evW: Dataset[Interaction], fMax: Int, kMax: Int,
+      seed: Long, w: Long): RDD[FlagRow] =
+    state.step(evW, fMax, kMax, seed, w, emitFlags = true)(_.flatMap { case (_, r) =>
+      if (r.kind == 4 || r.kind == 5) Iterator.single(FlagRow(w, r.user, r.item, r.ts, r.kind == 4))
+      else Iterator.empty
+    })
 
   /**
    * Full sampled pipeline: windowed interactions -> co-occurrence deltas.
@@ -529,47 +495,22 @@ object Sampling {
   }
 
   /**
-   * The multi-window sampled loop on raw RDDs with co-partitioned state —
-   * the Spark analogue of the reference's keyed operator state
-   * (UserInteractionCounterOneInputStreamOperator: state lives WITH the
-   * key; events shuffle to it, state never moves).
-   *
-   * Why not the Dataset cogroup per window: each window would pay
-   * Catalyst analysis + 5-6 scheduled stages + a full shuffle of BOTH
-   * state tables. Here per window exactly ONE job runs with the window's
-   * event slice as the only meaningful shuffle:
-   *  - item counts and user reservoirs keep their HashPartitioner across
-   *    windows, so the cogroup reads them as NARROW deps (zero state
-   *    bytes move — at 100 TB the state is |users|*kMax ints, the one
-   *    thing that must not reshuffle every window);
-   *  - refunds are the single genuinely cross-keyspace flow (user ->
-   *    item, the reference's feedback edge) and shuffle as a tiny
-   *    |items|-row reduceByKey;
-   *  - the per-window output is RDD-localCheckpointed (one action), so
-   *    lineage never chains across windows;
-   *  - per-user delta netting happens inside the fold output (associative
-   *    pre-aggregation, the reference's ItemRowAggregator #11), bounding
-   *    checkpoint volume.
-   * Fold order, RNG keying, and refund timing are byte-identical to
-   * processWindow — SamplingSpec's fixture + determinism tests pin both.
-   */
-  /**
    * One window's two keyed stages on raw RDDs: item-cut fold (cogroup by
    * item) then user reservoir fold (cogroup by user), with item-count
    * state riding through the user stage under tag-bit synthetic keys and
-   * per-user delta netting in the output. The single physical unit shared
-   * by the batch loop and processWindow — fold order and RNG keying live
-   * HERE, once.
+   * per-user delta netting in the output (associative pre-aggregation,
+   * the reference's ItemRowAggregator #11). The single physical unit
+   * behind every window loop ([[WindowState]]) — fold order and RNG
+   * keying live HERE, once.
    */
   private def windowStepRdd(
-      evByItem: org.apache.spark.rdd.RDD[(Long, Interaction)],
-      itemCnt: org.apache.spark.rdd.RDD[(Long, Int)],
-      userSt: org.apache.spark.rdd.RDD[(Long, (Int, Array[Int]))],
-      part: org.apache.spark.HashPartitioner,
+      evByItem: RDD[(Long, Interaction)],
+      itemCnt: RDD[(Long, Int)],
+      userSt: RDD[(Long, (Int, Array[Int]))],
+      part: HashPartitioner,
       fMax: Int, kMax: Int, seed: Long, w: Long,
       metrics: Option[PipelineMetrics],
-      emitFlags: Boolean = false)
-      : org.apache.spark.rdd.RDD[(Long, UserStageRow)] = {
+      emitFlags: Boolean): RDD[(Long, UserStageRow)] = {
     // --- item stage: flag sample bits against per-item counts ---
     val itemOut = evByItem.cogroup(itemCnt, part).mapPartitions(_.flatMap {
       case (itemL, (evs, cnts)) =>
@@ -626,24 +567,30 @@ object Sampling {
     }, preservesPartitioning = true)
   }
 
+  /**
+   * The multi-window batch loop on [[WindowState]]: the same co-partitioned
+   * step as the streaming shell, but materialized lazily. Each window's
+   * output is PERSISTED, not materialized: the final action computes the
+   * whole loop as ONE RDD DAG (RDD deps form a shared DAG, so unlike
+   * chained Catalyst cogroups there is no tree blow-up), and the persist
+   * makes each window's cogroup compute once even though three consumers
+   * read it. Every 8th window is eagerly localCheckpointed to bound
+   * lineage depth and failure recovery at long horizons (365 daily
+   * windows at cluster scale).
+   */
   private def sampledLoopRdd(ds: DataFrame, windowsOpt: Option[Array[Long]],
       fMax: Int, kMax: Int, seed: Long, loopParts: Int,
       metrics: Option[PipelineMetrics]): Dataset[CoocDelta] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val sc = spark.sparkContext
-    val part = new org.apache.spark.HashPartitioner(loopParts)
+    val state = new WindowState(sc, new HashPartitioner(loopParts))
 
     // one deserialized, cached object RDD for all window slices
     val evRdd = ds.select($"wnd".as("_1"), $"ev".as("_2"))
       .as[(Long, Interaction)].rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var itemCnt: org.apache.spark.rdd.RDD[(Long, Int)] =
-      sc.parallelize(Seq.empty[(Long, Int)], loopParts).partitionBy(part)
-    var userSt: org.apache.spark.rdd.RDD[(Long, (Int, Array[Int]))] =
-      sc.parallelize(Seq.empty[(Long, (Int, Array[Int]))], loopParts).partitionBy(part)
-    val checkpoints = new ArrayBuffer[org.apache.spark.rdd.RDD[(Long, UserStageRow)]]()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val checkpoints = new ArrayBuffer[RDD[(Long, UserStageRow)]]()
 
     // exception-safe cache lifetime: a mid-loop or final-job failure must
     // still release evRdd and every window's persisted output
@@ -655,17 +602,9 @@ object Sampling {
     for (wOpt <- windowPlan) {
       val evW = wOpt.fold(evRdd)(w => evRdd.filter(_._1 == w))
         .map { case (_, e) => (e.item.toLong, e) }
-      val userOut = windowStepRdd(evW, itemCnt, userSt, part,
-          fMax, kMax, seed, wOpt.getOrElse(-1L), metrics)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-      // The window's output is PERSISTED but not materialized: the final
-      // action computes the whole loop as ONE RDD DAG (RDD deps form a
-      // shared DAG, so unlike chained Catalyst cogroups there is no tree
-      // blow-up), and the persist makes each window's cogroup compute
-      // once even though three consumers read it. Every 8th window is
-      // eagerly localCheckpointed to bound lineage depth and failure
-      // recovery at long horizons (365 daily windows at cluster scale).
+      val userOut = state.advance(evW, fMax, kMax, seed, wOpt.getOrElse(-1L), metrics,
+          emitFlags = false)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       checkpoints += userOut
       // With metrics attached, EVERY window is eagerly materialized:
       // accumulators inside the folds are exactly-once only if the
@@ -676,16 +615,6 @@ object Sampling {
       if (metrics.isDefined || checkpoints.size % 8 == 0) {
         userOut.localCheckpoint(); userOut.count()
       }
-
-      // next-window states derive from the checkpoint: user state narrow
-      // (partitioner preserved), item counts + refunds re-keyed by item
-      // (the feedback edge) through one tiny reduceByKey
-      itemCnt = userOut.flatMap { case (_, r) =>
-        if (r.kind == 3) Iterator.single((r.item.toLong, r.inc))
-        else if (r.kind == 1) Iterator.single((r.item.toLong, -1))
-        else Iterator.empty
-      }.reduceByKey(part, _ + _)
-      userSt = userOut.filter(_._2.kind == 2).mapValues(r => (r.total, r.history))
     }
 
     // net across windows/users, materialize eagerly, release all caches
@@ -757,20 +686,13 @@ object Sampling {
     // size the per-window cogroups to per-window volume (the
     // sampledCoocDeltas rule): tiny windows gain nothing from the
     // session default's width and pay its per-partition overhead
-    val loopParts = windowLoopParts(spark, ds.count(), windows.length)
-    var itemState = spark.emptyDataset[ItemCount]
-    var userState = spark.emptyDataset[UserState]
-    val parts = new ArrayBuffer[Dataset[FlagRow]]()
-    for (w <- windows.sorted) {
-      val evW = ds.where($"wnd" === w).select($"ev.*").as[Interaction]
-      val (flags, is, us) =
-        processWindowFlags(evW, itemState, userState, fMax, kMax, seed, w, loopParts)
-      itemState = is
-      userState = us
-      parts += flags // lazy over that window's checkpoint — no extra job
+    val state = new WindowState(spark.sparkContext,
+      new HashPartitioner(windowLoopParts(spark, ds.count(), windows.length)))
+    val parts = windows.sorted.toSeq.map { w =>
+      processWindowFlags(state, ds.where($"wnd" === w).select($"ev.*").as[Interaction],
+        fMax, kMax, seed, w)
     }
     ds.unpersist()
-    if (parts.isEmpty) spark.emptyDataset[FlagRow].toDF()
-    else parts.reduce(_ union _).toDF()
+    spark.createDataset(spark.sparkContext.union(parts)).toDF()
   }
 }

@@ -1,7 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.StatsBridge
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.operators.{Cooccurrence, Sampling, Tables}
@@ -9,11 +15,12 @@ import graft.operators.Sampling.{CoocDelta, Interaction, ItemCount, UserState}
 
 /**
  * Incremental streaming co-occurrence pipeline: each microbatch runs the
- * same window step as the batch loop (Sampling.processWindow — item cut,
- * user reservoir, refunds), accumulating the delta stream; the rescorer
- * (row sums -> LLR -> top-K) runs over the accumulated matrix, mirroring
- * the reference's watermark-flush ordering: row sums are recomputed
- * BEFORE scoring within each flush
+ * same co-partitioned window step as the batch loop
+ * (Sampling.WindowState — item cut, user reservoir, refunds), keeping its
+ * delta increment; the rescorer (row sums -> LLR -> top-K) nets the
+ * increments into the accumulated matrix, mirroring the reference's
+ * watermark-flush ordering: row sums are recomputed BEFORE scoring within
+ * each flush
  * (reference: ItemRowRescorerTwoInputStreamOperator.java:116-142 — the
  * cross-input ordering invariant, trivial under microbatch sequencing).
  *
@@ -23,23 +30,51 @@ import graft.operators.Sampling.{CoocDelta, Interaction, ItemCount, UserState}
  */
 object StreamingCooc {
 
-  /** Mutable cross-batch state for one streaming pipeline instance. */
+  /** Mutable cross-batch state for one streaming pipeline instance. The
+    * keyed state stays co-partitioned RDDs (width: the session's
+    * shuffle.partitions); `itemState`, `userState` and `deltas` are
+    * Dataset views of it, and assigning one replaces that state. */
   final class State(spark: SparkSession) {
     import spark.implicits._
-    var itemState: Dataset[ItemCount] = spark.emptyDataset[ItemCount]
-    var userState: Dataset[UserState] = spark.emptyDataset[UserState]
-    var deltas: Dataset[CoocDelta] = spark.emptyDataset[CoocDelta]
+    private[streaming] val window = new Sampling.WindowState(spark.sparkContext,
+      new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    /** One cached delta increment per batch (netted per user, not across
+      * users), kept as internal rows of `deltaSchema`: rescore nets them
+      * all once, without encoding any row again. */
+    private[streaming] val increments = ArrayBuffer[RDD[InternalRow]]()
     /** Event-time watermark after the previous batch (max ts seen). Late
       * filtering uses the PREVIOUS batch's value — the same split Spark's
       * own watermark operators apply to multi-batch late data. */
     var watermarkMs: Long = Long.MinValue
+
+    def itemState: Dataset[ItemCount] =
+      spark.createDataset(window.itemCnt.map { case (i, c) => ItemCount(i.toInt, c) })
+    def itemState_=(ds: Dataset[ItemCount]): Unit =
+      window.itemCnt = ds.rdd.map(c => (c.item.toLong, c.cnt)).partitionBy(window.part)
+    def userState: Dataset[UserState] =
+      spark.createDataset(window.userSt.map { case (u, (t, h)) => UserState(u.toInt, t, h) })
+    def userState_=(ds: Dataset[UserState]): Unit =
+      window.userSt = ds.rdd.map(u => (u.user.toLong, (u.total, u.history))).partitionBy(window.part)
+    /** The accumulated matrix as its un-netted delta rows. */
+    def deltas: Dataset[CoocDelta] = StatsBridge.fromRows(spark,
+      spark.sparkContext.union(increments.toSeq).coalesce(window.part.numPartitions),
+      deltaSchema).as[CoocDelta]
+    def deltas_=(ds: Dataset[CoocDelta]): Unit = {
+      increments.clear()
+      increments += ds.rdd.map(d => InternalRow(d.item, d.other, d.inc))
+    }
   }
 
+  private val deltaSchema = Encoders.product[CoocDelta].schema
+
   /**
-   * Run one microbatch through the window step and fold its deltas into
-   * the accumulated matrix state. Returns the updated accumulated deltas.
+   * Run one microbatch through the window step and keep its delta
+   * increment in `st`. Returns this batch's NET increment (netted across
+   * users) — lazy over the cached increment, so only a caller that reads
+   * it (persistBatch) pays its small aggregation job.
    *
-   * With `metrics` attached the reference's late-element contract is
+   * One Spark job per batch (Sampling.WindowState.step), plus one with
+   * `metrics` attached: the reference's late-element contract is
    * enforced at ingest (the item stage is the first operator to see an
    * interaction): events with ts <= the previous batch's watermark are
    * dropped and counted as `ItemInteractionCounterLateElements`
@@ -53,38 +88,37 @@ object StreamingCooc {
   def processBatch(st: State, batch: Dataset[Interaction], batchId: Long,
       fMax: Int, kMax: Int, seed: Long,
       metrics: Option[Sampling.PipelineMetrics] = None): Dataset[CoocDelta] = {
+    val spark = batch.sparkSession
+    import spark.implicits._
     val admitted = metrics match {
       case None => batch
       case Some(m) =>
         val wm = st.watermarkMs
-        // one instrumented-mode job: late count + new watermark together
-        val row = batch.groupBy()
-          .agg(
-            sum(when(col("ts") <= wm, 1L).otherwise(0L)).as("late"),
-            max(col("ts")).as("mx"))
-          .head()
-        if (!row.isNullAt(0)) m.itemLateElements.add(row.getLong(0))
-        if (!row.isNullAt(1)) {
-          st.watermarkMs = math.max(wm, row.getLong(1))
+        // one instrumented-mode job (an RDD aggregate: a Dataset agg
+        // would add an exchange stage job): rows, late count, max ts
+        val (n, late, mx) = batch.select(col("ts")).as[Long].rdd
+          .aggregate((0L, 0L, Long.MinValue))(
+            { case ((c, l, x), t) => (c + 1, if (t <= wm) l + 1 else l, math.max(x, t)) },
+            { case ((c1, l1, x1), (c2, l2, x2)) => (c1 + c2, l1 + l2, math.max(x1, x2)) })
+        m.itemLateElements.add(late)
+        if (n > 0) {
+          st.watermarkMs = math.max(wm, mx)
           // non-empty batch = exactly one forwarded file under the
           // maxFilesPerTrigger=1 contract (see PipelineMetrics.numSplits)
           m.numSplits.add(1)
         }
         batch.filter(col("ts") > wm)
     }
-    val (d, is, us) =
-      Sampling.processWindow(admitted, st.itemState, st.userState, fMax, kMax, seed, batchId,
-        metrics)
-    st.itemState = is
-    st.userState = us
-    // dropCarriedStats: chained checkpoint-union-checkpoint would compound
-    // carried stats estimates across batches (see StatsBridge scaladoc)
-    st.deltas = org.apache.spark.sql.graftbridge.StatsBridge
-      .dropCarriedStats(st.deltas.union(d).localCheckpoint(true))
-    // this batch's NET delta increment — a lazy agg over the (already
-    // checkpointed) window-step output, so persisting it is one small
-    // extra job, not a recompute of the window step
-    d
+    val inc = st.window.step(admitted, fMax, kMax, seed, batchId, metrics)(_.flatMap {
+      case (_, r) =>
+        if (r.kind == 0) Iterator.single(InternalRow(r.item, r.other, r.inc)) else Iterator.empty
+    })
+    st.increments += inc
+    StatsBridge.fromRows(spark, inc, deltaSchema)
+      .groupBy(col("item"), col("other"))
+      .agg(sum(col("inc")).cast("int").as("inc"))
+      .where(col("inc") =!= 0)
+      .as[CoocDelta]
   }
 
   // ---------------------------------------------------------------------
@@ -129,7 +163,7 @@ object StreamingCooc {
     // and atomically renames it into place, even when replaying an
     // already-committed batch. restoreState additionally ignores
     // unparsable markers as a second line of defence.
-    CommitMarkers.commit(st.itemState.sparkSession,
+    CommitMarkers.commit(d.sparkSession,
       new org.apache.hadoop.fs.Path(s"$root/meta"), id,
       s"""{"watermarkMs":${st.watermarkMs}}""")
   }

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.classic
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /**
  * Spark 4's Dataset.localCheckpoint wraps the materialized RDD in a
@@ -37,4 +39,10 @@ object StatsBridge {
       case _ => ds
     }
   }
+
+  /** A DataFrame over rows that are already in Catalyst's internal form,
+    * so reading them skips per-object encoding. Like a re-wrapped
+    * checkpoint, its LogicalRDD carries no stats. */
+  def fromRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

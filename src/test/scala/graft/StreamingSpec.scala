@@ -61,6 +61,92 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed == batch)
   }
 
+  /** sf0.001's interactions grouped by event-time window, in
+    * window order (window = ts / windowMs, the batch loop's rule). */
+  private def windowBatches(windowMs: Long): Seq[Seq[Interaction]] =
+    chunks(1).flatten.groupBy(_.ts / windowMs).toSeq.sortBy(_._1).map(_._2)
+
+  private def cellMap(counts: DataFrame): Map[(Int, Int), Long] =
+    counts.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+
+  test("binding cuts, one window per microbatch: counts and counters == the batch loop") {
+    val sp = spark; import sp.implicits._
+    // sf0.001: 1,000 events, 100 items, 15 users over 30 days. fMax 3 drops
+    // item interactions; kMax 4 makes every user's reservoir replace and
+    // refund
+    val (fMax, kMax, seed, dayMs) = (3, 4, 42L, 86400000L)
+    val inter = Cooccurrence.interactions(spark, sfDir)
+    val mBatch = new Sampling.PipelineMetrics(spark.sparkContext)
+    Sampling.sampledCoocDeltas(inter, fMax, kMax, seed, dayMs, Some(mBatch)).count()
+    val batch = cellMap(Sampling.sampledCoocCounts(inter, fMax, kMax, seed, dayMs))
+
+    val mStream = new Sampling.PipelineMetrics(spark.sparkContext)
+    val st = new StreamingCooc.State(spark)
+    val windows = windowBatches(dayMs)
+    windows.zipWithIndex.foreach { case (b, i) =>
+      StreamingCooc.processBatch(st, b.toDS(), i.toLong, fMax, kMax, seed, Some(mStream))
+    }
+    val streamed = cellMap(st.deltas.groupBy("item", "other").agg(sum("inc").as("cnt"))
+      .where(col("cnt") > 0))
+    assert(windows.size > 20)
+    assert(streamed == batch)
+    assert(mStream.droppedInteractions.value > 0L, "item cut never dropped")
+    assert(mStream.feedbackElements.value > 0L, "reservoir never refunded")
+    assert(st.deltas.where(col("inc") < 0).count() > 0L, "reservoir never replaced")
+    assert(mStream.itemLateElements.value == 0L) // window order: nothing is late
+    Seq[Sampling.PipelineMetrics => org.apache.spark.util.LongAccumulator](
+      _.sampledInteractions, _.droppedInteractions, _.feedbackElements,
+      _.observedCooccurrences).foreach { acc =>
+      assert(acc(mStream).value == acc(mBatch).value,
+        s"${acc(mStream).name.get}: stream ${acc(mStream).value} != batch ${acc(mBatch).value}")
+    }
+  }
+
+  test("processBatch submits one Spark job per microbatch, two with metrics") {
+    val sp = spark; import sp.implicits._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val batches = windowBatches(7L * 86400000L).map(_.toDS())
+    def jobsPerBatch(metrics: Option[Sampling.PipelineMetrics]): Seq[Int] = {
+      val st = new StreamingCooc.State(spark)
+      batches.zipWithIndex.map { case (b, i) =>
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        jobs.set(0)
+        StreamingCooc.processBatch(st, b, i.toLong, 3, 4, 42L, metrics)
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        jobs.get()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val plain = jobsPerBatch(None)
+      assert(plain.forall(_ == 1), s"jobs per batch without metrics: $plain")
+      val instrumented = jobsPerBatch(Some(new Sampling.PipelineMetrics(spark.sparkContext)))
+      assert(instrumented.forall(_ == 2), s"jobs per batch with metrics: $instrumented")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("processBatch caches at most one RDD per batch plus the latest step output") {
+    val sp = spark; import sp.implicits._
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val st = new StreamingCooc.State(spark)
+    val batches = windowBatches(7L * 86400000L)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      StreamingCooc.processBatch(st, b.toDS(), i.toLong, 3, 4, 42L)
+    }
+    val held = (sc.getPersistentRDDs.keySet -- before).size
+    assert(held <= batches.size + 1, s"$held RDDs cached after ${batches.size} batches")
+    // the released step outputs are never read again: the matrix still rescores
+    assert(StreamingCooc.rescore(st, 5).count() > 0L)
+    // and a state that saw no batch rescores to nothing
+    assert(StreamingCooc.rescore(new StreamingCooc.State(spark), 5).count() == 0L)
+  }
+
   test("late/rescored accumulator parity: known late totals, user-late 0, rescored = matrix items") {
     val sp = spark; import sp.implicits._
     val m = new graft.operators.Sampling.PipelineMetrics(spark.sparkContext)
