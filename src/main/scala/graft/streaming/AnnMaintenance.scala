@@ -53,8 +53,8 @@ import graft.operators.IvfIndex
 final class AnnMaintenance(spark: SparkSession, root: String,
     nLists: Int = 16, iters: Int = 3, compactEvery: Int = 64) {
 
-  private val log = new ShardLog(spark, root, "assign", compactEvery,
-    new ShardLog.AppendFold(Seq("vec_id", "qv", "norm", "cluster")),
+  private val log = new ShardLog(spark, root, compactEvery, Seq(ShardLog.Relation("assign",
+    new ShardLog.AppendFold(Seq("vec_id", "qv", "norm", "cluster")))),
     // ordinary compactions must not lose the refit generation
     () => s""""gen":$generation""", deleteKey = "vec_id")
 
@@ -170,7 +170,7 @@ final class AnnMaintenance(spark: SparkSession, root: String,
         centroidsMemo = c // published: the bootstrap skips the re-read
         a
       } else IvfIndex.assignBatch(embs, centroids())
-    log.commitShard(batchId, shard, s"""{"nLists":$nLists,"iters":$iters}""")
+    log.commitShard(batchId, Seq(shard), s"""{"nLists":$nLists,"iters":$iters}""")
   }
 
   /**

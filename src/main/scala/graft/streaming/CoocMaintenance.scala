@@ -28,18 +28,14 @@ import graft.operators.Cooccurrence
  * same algebra with δ = −n: one NEGATIVE delta shard removes exactly
  * the user's own-pair contribution (no cross-user terms exist).
  *
- * Two sum-merge logs under `root/`:
+ * One [[ShardLog]] under `root/` whose batches carry two sum-merge
+ * relations, committed together under one marker:
  *  - `pairs/` — signed (item, other, cnt) deltas: the serving artifact;
  *  - `users/` — signed (user, item, n) histogram deltas: internal state
  *    the next batch's cross terms probe.
- *
- * COMMIT ORDER per batch: pairs FIRST, users SECOND; the USERS marker
- * is authoritative ([[isCommitted]]). This order makes crash replay
- * exact: the pair delta is a function of the PRE-BATCH user fold, so a
- * crash between the two commits leaves the user fold unchanged and the
- * replay recomputes the identical pair shard (which then
- * short-circuits); the serving artifact is never torn — between the
- * two commits it is simply "ahead" by one fully-committed batch.
+ * Crash replay is exact: the pair delta is a function of the PRE-BATCH
+ * user fold, and a batch's user shard stays invisible until its marker
+ * commits, so the replay recomputes the identical pair shard.
  *
  * SERVE: [[currentCounts]] is one sum-merge aggregate over the pairs
  * fold (snapshot + ≤ compactEvery delta shards — the same pair-scale
@@ -64,14 +60,15 @@ import graft.operators.Cooccurrence
 final class CoocMaintenance(spark: SparkSession, root: String,
     compactEvery: Int = 64) {
 
-  private val pairs = new ShardLog(spark, s"$root/pairs", "delta",
-    compactEvery, new ShardLog.SumFold(Seq("item", "other"), "cnt"))
-  private val users = new ShardLog(spark, s"$root/users", "delta",
-    compactEvery, new ShardLog.SumFold(Seq("user", "item"), "n"))
+  private val pairs = ShardLog.Relation("delta",
+    new ShardLog.SumFold(Seq("item", "other"), "cnt"), "pairs")
+  private val users = ShardLog.Relation("delta",
+    new ShardLog.SumFold(Seq("user", "item"), "n"), "users")
+  private val log = new ShardLog(spark, root, compactEvery, Seq(pairs, users))
 
-  def committedIds: Seq[Long] = users.committedIds
-  def isCommitted(id: Long): Boolean = users.isCommitted(id)
-  def committedCount: Long = users.committedCount
+  def committedIds: Seq[Long] = log.committedIds
+  def isCommitted(id: Long): Boolean = log.isCommitted(id)
+  def committedCount: Long = log.committedCount
 
   /** δ×δ / n×n: the batch co-occurrence algebra over one histogram
     * relation `(user, item, n)` — `Cooccurrence.coocCounts`' inner
@@ -103,7 +100,7 @@ final class CoocMaintenance(spark: SparkSession, root: String,
     * UNDER the sum-merge aggregate so the user predicate reaches the
     * delta scan. Callers guard on [[committedCount]] > 0. */
   private def oldHistograms(uids: DataFrame): DataFrame =
-    users.currentRows()
+    log.currentRows(users)
       .join(broadcast(uids.select(col("user")).distinct()), Seq("user"), "left_semi")
       .groupBy(col("user"), col("item")).agg(sum(col("n")).as("n"))
       .where(col("n") =!= 0)
@@ -115,58 +112,51 @@ final class CoocMaintenance(spark: SparkSession, root: String,
   /** Fold one ingest batch of interactions `(user, item, ...)` into the
     * standing matrix. Idempotent; O(batch · per-user activity). */
   def processBatch(batchId: Long, inter: DataFrame): Unit = {
-    if (users.isCommitted(batchId)) return
+    if (log.isCommitted(batchId)) return
     val delta = Cooccurrence
       .perUserItemCounts(inter.select(col("user"), col("item")))
       .localCheckpoint(true) // feeds the pair delta and the users shard
     try {
-      if (!pairs.isCommitted(batchId)) {
-        val terms =
-          if (users.committedCount == 0) selfTerms(delta)
-          else selfTerms(delta).unionByName(crossTerms(delta, oldHistograms(delta)))
-        pairs.commitShard(batchId, sumDelta(terms), "{}")
-      }
-      users.commitShard(batchId, delta, "{}")
+      val terms =
+        if (log.committedCount == 0) selfTerms(delta)
+        else selfTerms(delta).unionByName(crossTerms(delta, oldHistograms(delta)))
+      log.commitShard(batchId, Seq(sumDelta(terms), delta), "{}")
     } finally {
       org.apache.spark.sql.graftbridge.CheckpointBridge.release(delta)
     }
   }
 
   /** DELETE users' entire event contribution (takedown): one negative
-    * delta per log — ΔC = −(own-pair contribution), Δn = −n. Scores
+    * delta per relation — ΔC = −(own-pair contribution), Δn = −n. Scores
     * downstream shift exactly as if the users never existed. */
   def deleteBatch(batchId: Long, userIds: DataFrame): Unit = {
-    if (users.isCommitted(batchId)) return
-    require(users.committedCount > 0, "delete before any ingest")
+    if (log.isCommitted(batchId)) return
+    require(log.committedCount > 0, "delete before any ingest")
     val old = oldHistograms(userIds).localCheckpoint(true)
     try {
-      if (!pairs.isCommitted(batchId))
-        pairs.commitShard(batchId,
-          sumDelta(selfTerms(old)).select(col("item"), col("other"),
-            (-col("cnt")).as("cnt")), """{"del":true}""")
-      users.commitShard(batchId,
-        old.select(col("user"), col("item"), (-col("n")).as("n")),
-        """{"del":true}""")
+      log.commitShard(batchId, Seq(
+        sumDelta(selfTerms(old)).select(col("item"), col("other"), (-col("cnt")).as("cnt")),
+        old.select(col("user"), col("item"), (-col("n")).as("n"))), """{"del":true}""")
     } finally {
       org.apache.spark.sql.graftbridge.CheckpointBridge.release(old)
     }
   }
 
-  /** Force compaction on both logs (two calls complete the physical
-    * erasure of negative-delta removals, like the tombstone members). */
-  def compactNow(): Unit = { pairs.compactNow(); users.compactNow() }
+  /** Force a compaction (two calls complete the physical erasure of
+    * negative-delta removals, like the tombstone members). */
+  def compactNow(): Unit = log.compactNow()
 
   /** The standing C matrix `(item, other, cnt)`, cnt > 0 — sum-merge of
     * the pairs fold; the exact relation `Cooccurrence.coocCounts`
     * computes from raw events. */
   def currentCounts(): DataFrame =
-    pairs.currentRows()
+    log.currentRows(pairs)
       .groupBy(col("item"), col("other")).agg(sum(col("cnt")).as("cnt"))
       .where(col("cnt") > 0)
 
   /** The standing user histograms (specs/forensics). */
   def currentHistograms(): DataFrame =
-    users.currentRows()
+    log.currentRows(users)
       .groupBy(col("user"), col("item")).agg(sum(col("n")).as("n"))
       .where(col("n") =!= 0)
 

@@ -71,8 +71,8 @@ final class IndexMaintenance(spark: SparkSession, root: String,
   def this(spark: SparkSession, root: String, maxHamming: Int) =
     this(spark, root, IndexMaintenance.Simhash(maxHamming))
 
-  private val log = new ShardLog(spark, root, "delta", compactEvery,
-    IndexMaintenance.DeltaFold, deleteKey = "node")
+  private val log = new ShardLog(spark, root, compactEvery,
+    Seq(ShardLog.Relation("delta", IndexMaintenance.DeltaFold)), deleteKey = "node")
 
   private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -220,7 +220,7 @@ final class IndexMaintenance(spark: SparkSession, root: String,
     // transient per-batch caches: the banded join scans the standing fps
     // once per simhash chunk and the delta tail scans `base` three times;
     // both are released before the batch commits and before the
-    // compaction scan (commitShardNoCompact + compactIfDue below), so no
+    // compaction scan (writeShards + compactIfDue below), so no
     // cross-batch memory state accumulates (a restart pays two cold scans)
     val all = standingRaw
       .map(_.withColumn("inc", lit(false)).unionByName(newFps))
@@ -232,7 +232,7 @@ final class IndexMaintenance(spark: SparkSession, root: String,
         // (r17 opt round — the old shape localCheckpointed the delta and
         // then wrote the checkpoint back out, one redundant job per batch)
         algo.refreshDeltaTo(all, base,
-          df => log.writeShard(batchId, df.withColumn("b", lit(batchId))))
+          df => log.writeShards(batchId, Seq(df.withColumn("b", lit(batchId)))))
         log.commitWrittenShard(batchId, s"""{"batch":$batchId}""")
       }
     } finally {

@@ -57,9 +57,9 @@ final class IvfPqMaintenance(spark: SparkSession, root: String,
     pqIters: Int = 2, compactEvery: Int = 64, dims: Int = 64,
     residual: Boolean = false) {
 
-  private val log = new ShardLog(spark, root, "codes", compactEvery,
+  private val log = new ShardLog(spark, root, compactEvery, Seq(ShardLog.Relation("codes",
     new ShardLog.AppendFold(
-      Seq("vec_id", "cluster", "recon2") ++ (0 until m).map(s => s"code_$s")),
+      Seq("vec_id", "cluster", "recon2") ++ (0 until m).map(s => s"code_$s")))),
     // ordinary compactions must not lose the refit generation
     () => s""""gen":$generation""", deleteKey = "vec_id")
 
@@ -196,14 +196,14 @@ final class IvfPqMaintenance(spark: SparkSession, root: String,
           PqIndex.buildResPq(assigned, cents, m, ksub, pqIters, dims)
         publishModels(0, cents, books)
         modelsMemo = (cents, books)
-        log.commitShard(batchId, table, marker)
+        log.commitShard(batchId, Seq(table), marker)
         org.apache.spark.sql.graftbridge.CheckpointBridge.release(assigned)
         org.apache.spark.sql.graftbridge.CheckpointBridge.release(table)
       } else {
         val (books, codes) = PqIndex.buildPq(embs, m, ksub, pqIters, dims)
         publishModels(0, cents, books)
         modelsMemo = (cents, books)
-        log.commitShard(batchId, PqIndex.ivfpqTable(assigned, codes), marker)
+        log.commitShard(batchId, Seq(PqIndex.ivfpqTable(assigned, codes)), marker)
         // the shard parquet is the durable copy — the bootstrap builds'
         // checkpoint blocks are transient and released once it's written
         org.apache.spark.sql.graftbridge.CheckpointBridge.release(assigned)
@@ -217,7 +217,7 @@ final class IvfPqMaintenance(spark: SparkSession, root: String,
         else
           PqIndex.ivfpqTable(
             IvfIndex.assignBatch(embs, cents), PqIndex.encodeBatch(embs, books))
-      log.commitShard(batchId, shard, marker)
+      log.commitShard(batchId, Seq(shard), marker)
     }
   }
 

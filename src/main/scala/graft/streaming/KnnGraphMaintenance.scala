@@ -52,8 +52,8 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
 
   private val vec = new AnnMaintenance(spark, s"$root/vec", nLists, iters,
     compactEvery)
-  private val log = new ShardLog(spark, s"$root/graph", "edges", compactEvery,
-    new KnnGraphMaintenance.TopKFold(k),
+  private val log = new ShardLog(spark, s"$root/graph", compactEvery,
+    Seq(ShardLog.Relation("edges", new KnnGraphMaintenance.TopKFold(k))),
     // ordinary compactions must not lose the probe-generation watermark
     () => s""""probesFrom":$probesFrom""", deleteKey = "node")
 
@@ -148,7 +148,7 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
       // a crash here recomputes the identical edge shard
       IvfIndex.probePairs(cents, batchAssigned, nProbe)
         .write.mode("overwrite").parquet(s"$root/probes/$batchId")
-      log.commitShard(batchId, shard,
+      log.commitShard(batchId, Seq(shard),
         s"""{"k":$k,"nProbe":$nProbe,"nLists":$nLists}""")
       probeIdsMemo = (probeIds :+ batchId).distinct.sorted
     } finally {

@@ -24,7 +24,9 @@ import graft.operators.Retrieval
  * deltas); this member applies the same standing-state move to the
  * lexical statistics a BM25 serve needs.
  *
- * Two logs under `root/`, both tombstoned by `doc_id`:
+ * One [[ShardLog]] under `root/` whose batches carry two relations
+ * (three with positions), committed together under one marker and
+ * tombstoned together by `doc_id`:
  *  - `postings/` — per-batch segments of `(doc_id, term, tf, dl)`: tf
  *    per (doc, term), dl (the doc's token count) denormalized onto the
  *    row so the serve scores without a per-doc join;
@@ -35,14 +37,8 @@ import graft.operators.Retrieval
  *  - `positions/` (opt-in, `positions = true`) — per-batch segments of
  *    `(doc_id, term, pos)`: the position lists exact phrase search
  *    reads ([[phraseSearch]]), term-pruned like the postings.
- *
- * Commit order per batch: doclens first, postings second; the POSTINGS
- * marker is the authoritative commit (isCommitted/committedCount). A
- * crash between the two leaves doclens committed alone — stats then
- * count docs whose postings are not yet visible, a transient the
- * family's replay contract closes (foreachBatch redelivers the batch;
- * doclens short-circuits, postings re-commits), same as the
- * vec-before-graph window in [[KnnGraphMaintenance]].
+ * One marker per batch means N, avgdl, df and the positions always
+ * describe the same set of documents, across any crash.
  *
  * SERVE: [[topK]] reads ONLY the postings rows of the query's terms —
  * a parquet scan with the term predicate pushed down (row-group
@@ -58,39 +54,40 @@ import graft.operators.Retrieval
  * avgdl all reflect the erasure because they are derived from the
  * live folds, never stored.
  *
- * DELETES ([[deleteBatch]]) ride [[ShardLog.commitDeletes]] on both
- * logs: serves exclude the doc's postings and its dl row as soon as the
- * marker commits, the covering compaction physically drops the rows,
- * and the tombstone shards sweep one cycle later — BM25 right-to-
- * erasure with scores exactly as if the doc never existed. There is no
- * refit verb: BM25 has no trained model — compaction (the segment
- * merge) is the only periodic maintenance the index needs.
+ * DELETES ([[deleteBatch]]) ride [[ShardLog.commitDeletes]]: one
+ * tombstone shard masks every relation, so serves exclude the doc's
+ * postings, dl row and positions as soon as the marker commits, the
+ * covering compaction physically drops the rows, and the tombstone
+ * shard sweeps one cycle later — BM25 right-to-erasure with scores
+ * exactly as if the doc never existed. There is no refit verb: BM25 has
+ * no trained model — compaction (the segment merge) is the only
+ * periodic maintenance the index needs.
  */
 final class LexicalIndexMaintenance(spark: SparkSession, root: String,
     compactEvery: Int = 64, positions: Boolean = false) {
 
-  private val postings = new ShardLog(spark, s"$root/postings", "seg",
-    compactEvery, new ShardLog.AppendFold(Seq("doc_id", "term", "tf", "dl")),
-    deleteKey = "doc_id")
-  private val doclens = new ShardLog(spark, s"$root/doclens", "seg",
-    compactEvery, new ShardLog.AppendFold(Seq("doc_id", "dl")),
-    deleteKey = "doc_id")
+  private val postings = ShardLog.Relation("seg",
+    new ShardLog.AppendFold(Seq("doc_id", "term", "tf", "dl")), "postings")
+  private val doclens = ShardLog.Relation("seg",
+    new ShardLog.AppendFold(Seq("doc_id", "dl")), "doclens")
   // positional segments (opt-in — they are dl-sized per doc, not
   // distinct-term-sized): what phrase queries read, term-pruned
-  private val poslog = new ShardLog(spark, s"$root/positions", "seg",
-    compactEvery, new ShardLog.AppendFold(Seq("doc_id", "term", "pos")),
-    deleteKey = "doc_id")
+  private val poslog = ShardLog.Relation("seg",
+    new ShardLog.AppendFold(Seq("doc_id", "term", "pos")), "positions")
+  private val segments = new ShardLog(spark, root, compactEvery,
+    Seq(postings, doclens) ++ (if (positions) Seq(poslog) else Nil), deleteKey = "doc_id")
 
-  def committedIds: Seq[Long] = postings.committedIds
-  def coveredUpTo: Option[Long] = postings.coveredUpTo
-  def isCommitted(id: Long): Boolean = postings.isCommitted(id)
-  def committedCount: Long = postings.committedCount
+  def committedIds: Seq[Long] = segments.committedIds
+  def coveredUpTo: Option[Long] = segments.coveredUpTo
+  def isCommitted(id: Long): Boolean = segments.isCommitted(id)
+  def committedCount: Long = segments.committedCount
 
   /** Fold one ingest batch of `(doc_id, text)` into the standing index.
-    * Idempotent; O(batch) — one tokenize of the batch, two segment
-    * writes, nothing scans the standing state except compaction. */
+    * Idempotent; O(batch) — one tokenize of the batch, one segment
+    * write per relation, nothing scans the standing state except
+    * compaction. */
   def processBatch(batchId: Long, docs: DataFrame): Unit = {
-    if (postings.isCommitted(batchId)) return
+    if (segments.isCommitted(batchId)) return
     val toks = docs
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -99,40 +96,31 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
       val tf = toks
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-      if (!doclens.isCommitted(batchId))
-        doclens.commitShard(batchId, dl, "{}")
-      if (positions && !poslog.isCommitted(batchId))
-        poslog.commitShard(batchId,
-          toks.select(col("doc_id"), col("term"), col("pos")), "{}")
-      postings.commitShard(batchId, tf.join(dl, "doc_id")
-        .select(col("doc_id"), col("term"), col("tf"), col("dl")), "{}")
+      segments.commitShard(batchId, Seq(
+        tf.join(dl, "doc_id").select(col("doc_id"), col("term"), col("tf"), col("dl")), dl) ++
+        (if (positions) Seq(toks) else Nil), "{}")
     } finally {
       org.apache.spark.sql.graftbridge.CheckpointBridge.release(toks)
       invalidateStats()
     }
   }
 
-  /** DELETE standing docs by id (takedown / right-to-erasure): tombstone
-    * both logs under one batch id. Scores reflect the erasure exactly —
-    * df, N and avgdl are all derived from the live folds. */
+  /** DELETE standing docs by id (takedown / right-to-erasure): one
+    * tombstone batch masks every relation. Scores reflect the erasure
+    * exactly — df, N and avgdl are all derived from the live folds. */
   def deleteBatch(batchId: Long, ids: DataFrame): Unit = {
-    if (postings.isCommitted(batchId)) return
-    val keys = ids.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    if (!doclens.isCommitted(batchId))
-      doclens.commitDeletes(batchId, keys, """{"del":true}""")
-    if (positions && !poslog.isCommitted(batchId))
-      poslog.commitDeletes(batchId, keys, """{"del":true}""")
-    postings.commitDeletes(batchId, keys, """{"del":true}""")
+    segments.commitDeletes(batchId, ids.select(col("doc_id").cast("long").as("doc_id")),
+      """{"del":true}""")
     invalidateStats()
   }
 
   /** The standing postings relation (doc_id, term, tf, dl) — snapshot +
     * tail, tombstones applied; resolved from the cached commit state at
     * plan time (serve-while-compact, per [[ShardLog]]). */
-  def currentPostings(): DataFrame = postings.currentRows()
+  def currentPostings(): DataFrame = segments.currentRows(postings)
 
   /** The standing doc-length relation (doc_id, dl). */
-  def currentDoclens(): DataFrame = doclens.currentRows()
+  def currentDoclens(): DataFrame = segments.currentRows(doclens)
 
   // the corpus stats are ONE doc-cardinality aggregate (two slim
   // columns, map-side partial) — memoized per commit state so a serve
@@ -170,7 +158,7 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
     * root built with `positions = true`. */
   def currentPositions(): DataFrame = {
     require(positions, "this index was built without positional segments")
-    poslog.currentRows()
+    segments.currentRows(poslog)
   }
 
   /** EXACT PHRASE SEARCH from the standing positional segments: reads

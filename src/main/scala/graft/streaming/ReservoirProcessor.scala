@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-import graft.operators.Sampling.{CoocDelta, Flagged}
+import graft.operators.Sampling
+import graft.operators.Sampling.{CoocDelta, Flagged, UserState}
 
 /**
  * Streaming user-history reservoir as a Spark 4.x StatefulProcessor
@@ -49,47 +50,19 @@ class ReservoirProcessor(kMax: Int, seed: Long)
 
   override def handleInputRows(user: Int, rows: Iterator[Flagged],
       timerValues: TimerValues): Iterator[CoocDelta] = {
-    val sorted = rows.toSeq.sortBy(e => (e.ts, e.item))
-    var total = if (totalState.exists()) totalState.get() else 0
-    val history = scala.collection.mutable.ArrayBuffer[Int](
-      (if (histState.exists()) histState.get().items else Array.empty[Int]): _*)
-    val out = scala.collection.mutable.ArrayBuffer[CoocDelta]()
-    // The SAME portable draw as the batch path (Sampling.drawFor): a pure
-    // hash of (seed, user, total), so the streaming fold cannot drift
-    // from the batch windows no matter how events split across batches.
+    val st = UserState(user,
+      if (totalState.exists()) totalState.get() else 0,
+      if (histState.exists()) histState.get().items else Array.empty[Int])
+    // The SAME fold and portable draw as the batch windows (userFold with
+    // drawFor: a pure hash of (seed, user, total)), so the streaming fold
+    // cannot drift from them no matter how events split across batches.
+    // Dropped events' refunds are batch-only (see scaladoc): ignored here.
     val md = java.security.MessageDigest.getInstance("MD5")
-    sorted.foreach { e =>
-      total += 1
-      if (e.sample) {
-        if (history.length < kMax) {
-          history.foreach { other =>
-            out += CoocDelta(e.item, other, 1)
-            out += CoocDelta(other, e.item, 1)
-          }
-          history += e.item
-        } else {
-          val k = graft.operators.Sampling.drawFor(md, seed, user, total)
-          if (k < kMax) {
-            val prev = history(k)
-            var i = 0
-            while (i < history.length) {
-              if (i != k) {
-                out += CoocDelta(e.item, history(i), 1)
-                out += CoocDelta(history(i), e.item, 1)
-                out += CoocDelta(prev, history(i), -1)
-                out += CoocDelta(history(i), prev, -1)
-              }
-              i += 1
-            }
-            history(k) = e.item
-          }
-          // else: dropped (refund cycle is batch-only, see scaladoc)
-        }
-      }
-    }
-    totalState.update(total)
-    histState.update(ReservoirProcessor.Hist(history.toArray))
-    out.iterator
+    val (deltas, _, next) = Sampling.userFold(rows.toSeq.sortBy(e => (e.ts, e.item)), st,
+      kMax, t => Sampling.drawFor(md, seed, user, t), None)
+    totalState.update(next.total)
+    histState.update(ReservoirProcessor.Hist(next.history))
+    deltas.iterator
   }
 }
 

@@ -6,70 +6,67 @@ import org.apache.spark.sql.functions.col
 
 /**
  * The crash-safe PER-BATCH SHARD LOG shared by the standing-index
- * maintenance family ([[AnnMaintenance]], [[IvfPqMaintenance]],
- * [[SqMaintenance]], [[IndexMaintenance]]): one parquet shard + one
- * commit marker per ingest batch, periodic compaction into a snapshot,
- * and commit markers that ROLL UP into the snapshot marker so the marker
- * log stays bounded by `compactEvery` over an unbounded stream lifetime
- * (r14 verdict #1; flat per-batch cost proven by the 200-batch
- * AnnMaintScale soak).
+ * maintenance family: one commit marker per batch over one parquet
+ * shard per RELATION, periodic compaction into snapshots, and commit
+ * markers that ROLL UP into the snapshot marker so the marker log stays
+ * bounded by `compactEvery` over an unbounded stream lifetime (r14
+ * verdict #1).
+ *
+ * A batch is a set of named relations ([[ShardLog.Relation]]) committed
+ * under ONE marker — the Structured Streaming commit-log shape: one
+ * entry per microbatch, whatever the batch wrote. Most members keep one
+ * relation; [[CoocMaintenance]] (pairs + user histograms) and
+ * [[LexicalIndexMaintenance]] (postings + doc lengths + positions) keep
+ * several, so a crash can never leave one relation of a batch visible
+ * without the others.
  *
  * Layout under `root/`:
- *  - `<dataDir>/<b>/` — one parquet shard per committed batch;
- *  - `meta/<b>` — the batch's commit marker ([[CommitMarkers]]);
- *  - `base/<b>/` + `basemeta/<b>` — compacted snapshots (the fold of
- *    every shard <= b); covered shards, rolled-up markers, and superseded
- *    snapshots are deleted ONE COMPACTION CYCLE LATE (see below);
- *  - `dels/<b>/` — TOMBSTONE batches ([[commitDeletes]]): a key-only
- *    shard naming standing rows to remove, committed under the same
- *    marker log. Reads anti-join tombstones newer than the covered
- *    snapshot (KB-scale broadcast — the standing side never moves);
- *    the covering compaction's snapshot physically excludes the rows,
- *    and the tombstone shard itself is swept one cycle later — the
- *    takedown/right-to-erasure path, bounded at two compaction cycles
- *    (or two [[compactNow]] calls for an eager purge).
+ *  - `meta/<b>` — batch b's commit marker ([[CommitMarkers]]), the only
+ *    record that b committed;
+ *  - `basemeta/<b>` — a compacted snapshot's marker (the fold of every
+ *    batch <= b, across every relation);
+ *  - per relation, `<name>/<dataDir>/<b>/` (one parquet shard per
+ *    committed batch) and `<name>/base/<b>/` (its snapshots). A relation
+ *    with an empty name lives at the root itself — `<dataDir>/<b>/` and
+ *    `base/<b>/` — which is the single-relation layout;
+ *  - `dels/<b>/` — TOMBSTONE batches ([[commitDeletes]]): one key-only
+ *    shard naming standing rows to remove from every relation, committed
+ *    under the same marker log.
  *
- * How the standing rows FOLD out of (snapshot, shard tail) is pluggable
- * ([[ShardLog.Fold]]): the ANN family appends (one multi-path scan —
- * snapshot and shards share a schema), [[IndexMaintenance]] folds
- * latest-wins deltas (window over the tail + broadcast anti-join against
- * the snapshot). The log owns the PROTOCOL — markers, rollup, compaction
- * ordering, sweeps — exactly once for every member (r15 verdict #2: the
- * crash-ordering discipline previously lived in two hand-synced copies).
+ * How each relation's standing rows FOLD out of (snapshot, shard tail) is
+ * pluggable ([[ShardLog.Fold]]): append (one multi-path scan — snapshot
+ * and shards share a schema), latest-wins deltas ([[IndexMaintenance]]),
+ * sum-merge ([[ShardLog.SumFold]]). The log owns the PROTOCOL — markers,
+ * rollup, compaction ordering, sweeps — exactly once for every member.
  *
- * Crash-ordering discipline (inherited verbatim from the r12-r14 dedup
- * maintenance lineage): a batch is committed iff its marker exists (or
- * its id <= the snapshot's covered prefix); snapshots are derived data —
- * an unmarked partial snapshot dir is ignored by readers and swept by the
- * next compaction; replay of a committed batch short-circuits on the
- * marker. SINGLE WRITER: the cached commit state assumes exactly one live
- * instance writes a given root (the foreachBatch contract).
+ * Crash ordering: a commit writes every relation's shard, then the one
+ * marker; a compaction writes every relation's snapshot, then the one
+ * basemeta marker. A batch is committed iff its marker exists (or its id
+ * <= the snapshot's covered prefix); shards and snapshots without a
+ * marker are never read and are overwritten by the replay or swept by
+ * the next compaction; replay of a committed batch short-circuits on the
+ * marker. Sweeps delete a marker before the files it names, so no marker
+ * ever outlives its shards. SINGLE WRITER: the cached commit state
+ * assumes exactly one live instance writes a given root (the
+ * foreachBatch contract).
  *
  * SERVE-WHILE-COMPACT (r15 verdict #1): deletions are DEFERRED BY ONE
  * COMPACTION CYCLE. A compaction at `upTo = U` with previous snapshot `P`
- * writes `base/U`, commits its marker, and then sweeps only what the
- * PREVIOUS cycle covered: shards <= P and snapshots < P — `base/P` and
- * the shards in (P, U] stay on disk until the compaction after U. Every
- * file a serving plan can reference (the read set resolved from the
- * cached state at plan time: one snapshot + the then-current tail)
- * therefore survives at least one full concurrent compaction, closing
- * the FileNotFoundException race the drain-then-read contract used to
- * document away. Shards are immutable, so the late-executed plan returns
- * exactly the rows as of its plan time. The price is bounded retention:
- * at most one extra snapshot + compactEvery extra shards on disk. A plan
- * held across TWO compaction points must be re-resolved (or eagerly
- * materialized via `localCheckpoint`) — the one remaining caveat, now a
- * cycle wide instead of a batch wide.
+ * writes the `base/U` snapshots, commits their marker, and then sweeps
+ * only what the PREVIOUS cycle covered: shards <= P and snapshots < P —
+ * `base/P` and the shards in (P, U] stay on disk until the compaction
+ * after U. Every file a serving plan can reference (the read set resolved
+ * from the cached state at plan time: one snapshot + the then-current
+ * tail) therefore survives at least one full concurrent compaction.
+ * Shards are immutable, so the late-executed plan returns exactly the
+ * rows as of its plan time. The price is bounded retention: at most one
+ * extra snapshot + compactEvery extra shards on disk. A plan held across
+ * TWO compaction points must be re-resolved (or eagerly materialized via
+ * `localCheckpoint`).
  */
 private[streaming] final class ShardLog(spark: SparkSession, root: String,
-    dataDir: String, compactEvery: Int, fold: ShardLog.Fold,
+    compactEvery: Int, relations: Seq[ShardLog.Relation],
     markerExtra: () => String = () => "", deleteKey: String = "") {
-
-  /** Append-semantics log (the ANN family): snapshot and shards share a
-    * schema and fold as one multi-path scan of `readCols`. */
-  def this(spark: SparkSession, root: String, dataDir: String,
-      compactEvery: Int, readCols: Seq[String]) =
-    this(spark, root, dataDir, compactEvery, new ShardLog.AppendFold(readCols))
 
   require(compactEvery >= 2, s"compactEvery must be >= 2, got $compactEvery")
 
@@ -77,13 +74,15 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
   private val baseMetaDir = new Path(s"$root/basemeta")
   private val delsDir = new Path(s"$root/dels")
   private def fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def dataDir(rel: ShardLog.Relation) = s"$root/${rel.dataPath}"
+  private def baseDir(rel: ShardLog.Relation) = s"$root/${rel.basePath}"
 
   // committed DELETE-batch ids whose dels/<b> key shard is still live —
-  // cached from one startup listing (the IndexMaintenance.fpsIds
-  // precedent: filter out unmarked crash debris via isCommitted), advanced
-  // per commitDeletes, pruned at the deferred sweep. Bounded: tombstones
-  // fold into the snapshot at compaction and their shards are swept one
-  // cycle later, so at most ~2*compactEvery ids are ever live.
+  // cached from one startup listing (unmarked crash debris filtered out
+  // via isCommitted), advanced per commitDeletes, pruned at the deferred
+  // sweep. Bounded: tombstones fold into the snapshot at compaction and
+  // their shards are swept one cycle later, so at most ~2*compactEvery
+  // ids are ever live.
   @volatile private var delIdsMemo: Vector[Long] = _
   private def delIds: Vector[Long] = {
     if (delIdsMemo == null) {
@@ -128,34 +127,31 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
   def latestSnapshotMarker: Option[String] =
     state.coveredUpTo.map(b => CommitMarkers.readMarker(spark, baseMetaDir, b))
 
-  /** Write one batch's shard + marker, then compact on cadence. The
-    * caller must have short-circuited on [[isCommitted]] already (the
-    * shard expression may be expensive). */
-  def commitShard(batchId: Long, shard: DataFrame, markerJson: String): Unit = {
-    commitShardNoCompact(batchId, shard, markerJson)
+  /** Commit one batch — one shard per relation, in `relations` order —
+    * under one marker, then compact on cadence. The caller must have
+    * short-circuited on [[isCommitted]] already (the shard expressions
+    * may be expensive). */
+  def commitShard(batchId: Long, shards: Seq[DataFrame], markerJson: String): Unit = {
+    writeShards(batchId, shards)
+    commitWrittenShard(batchId, markerJson)
     compactIfDue()
   }
 
-  /** The commit half of [[commitShard]] — split out for owners that must
-    * release per-batch caches between the commit and the compaction scan
-    * ([[IndexMaintenance]]). Callers pair it with [[compactIfDue]]. */
-  def commitShardNoCompact(batchId: Long, shard: DataFrame,
-      markerJson: String): Unit = {
-    writeShard(batchId, shard)
-    commitWrittenShard(batchId, markerJson)
+  /** Write half of [[commitShard]], exposed for owners whose delta
+    * producer sinks the batch's rows itself (one materialization — no
+    * checkpoint-then-write): every relation's shard, NO marker. The
+    * caller MUST follow with [[commitWrittenShard]] and [[compactIfDue]];
+    * a crash in between leaves unmarked debris the replay overwrites. */
+  def writeShards(batchId: Long, shards: Seq[DataFrame]): Unit = {
+    require(shards.size == relations.size,
+      s"${shards.size} shards for ${relations.size} relations")
+    relations.zip(shards).foreach { case (rel, shard) =>
+      shard.write.mode("overwrite").parquet(s"${dataDir(rel)}/$batchId")
+    }
   }
 
-  /** Write half of [[commitShardNoCompact]], exposed for owners whose
-    * delta producer sinks the batch's rows itself (one materialization —
-    * no checkpoint-then-write): the shard parquet write, NO marker. The
-    * caller MUST follow with [[commitWrittenShard]]; a crash in between
-    * leaves unmarked debris the replay overwrites (the standard
-    * marker-last ordering). */
-  def writeShard(batchId: Long, shard: DataFrame): Unit =
-    shard.write.mode("overwrite").parquet(s"$root/$dataDir/$batchId")
-
-  /** Marker half of [[commitShardNoCompact]] — commit a shard already
-    * written via [[writeShard]]. */
+  /** Marker half of [[commitShard]] — commit shards already written via
+    * [[writeShards]]. */
   def commitWrittenShard(batchId: Long, markerJson: String): Unit = {
     CommitMarkers.commit(spark, metaDir, batchId, markerJson)
     logState = state.withCommitted(batchId)
@@ -163,13 +159,14 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
 
   /**
    * Commit one DELETE batch: `keys` (any DataFrame exposing `deleteKey`)
-   * names standing rows to remove. The tombstone shard is key-only and
-   * lives in `dels/<b>`; its marker joins the same log, so deletes are
-   * ordered, crash-safe, and replay-idempotent exactly like ingest.
+   * names standing rows to remove from EVERY relation (each must carry
+   * `deleteKey`). The tombstone shard is key-only and lives in
+   * `dels/<b>`; its marker joins the same log, so deletes are ordered,
+   * crash-safe, and replay-idempotent exactly like ingest.
    *
    * Read semantics: committed tombstones are anti-joined onto every fold
    * (serves reflect the delete as soon as its marker commits); the next
-   * compaction's snapshot PHYSICALLY excludes the rows, and both the
+   * compaction's snapshots PHYSICALLY exclude the rows, and both the
    * covering data shards and the tombstone shards are swept one cycle
    * later — after at most two compaction cycles the deleted rows exist
    * nowhere under `root/` (the takedown/right-to-erasure contract;
@@ -185,8 +182,7 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     if (isCommitted(batchId)) return
     keys.select(col(deleteKey)).distinct()
       .write.mode("overwrite").parquet(new Path(delsDir, batchId.toString).toString)
-    CommitMarkers.commit(spark, metaDir, batchId, markerJson)
-    logState = state.withCommitted(batchId)
+    commitWrittenShard(batchId, markerJson)
     delIdsMemo = (delIds :+ batchId).distinct.sorted
     compactIfDue()
   }
@@ -205,20 +201,22 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
   }
 
   /** Periodic shard compaction: every compactEvery committed batches,
-    * fold everything readable into one snapshot so the read stays
-    * O(1 snapshot + compactEvery shards) forever. Skipping a due point
-    * (e.g. a replayed batch short-circuited) only defers truncation. */
+    * fold everything readable into one snapshot per relation so the read
+    * stays O(1 snapshot + compactEvery shards) forever. Skipping a due
+    * point (e.g. a replayed batch short-circuited) only defers
+    * truncation. */
   def compactIfDue(): Unit =
     if (state.count % compactEvery == 0) compact(state.maxId.get)
 
   /**
    * Commit `batchId` DIRECTLY AS a compacted snapshot whose rows REPLACE
-   * the fold — the streaming-refit path: the caller retrained its models
-   * and re-derived the whole standing table against them, so the old
-   * shards are not just compactable but semantically superseded.
-   * `extraJson` fields (e.g. `"gen":1`) are folded into the snapshot
-   * marker — after the covered-marker sweep it is the durable record of
-   * which model generation the snapshot's rows were derived under.
+   * the fold — the streaming-refit path of the single-relation members:
+   * the caller retrained its models and re-derived the whole standing
+   * table against them, so the old shards are not just compactable but
+   * semantically superseded. `extraJson` fields (e.g. `"gen":1`) are
+   * folded into the snapshot marker — after the covered-marker sweep it
+   * is the durable record of which model generation the snapshot's rows
+   * were derived under.
    *
    * Crash-safe like [[compactIfDue]]: nothing is visible until the
    * basemeta marker commits (a crash before it leaves the old log plus
@@ -227,6 +225,7 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
    * same one-cycle deferral as ordinary compaction.
    */
   def commitSnapshot(batchId: Long, rows: DataFrame, extraJson: String): Unit = {
+    require(relations.size == 1, "a refit snapshot replaces a single relation")
     require(!isCommitted(batchId), s"batch $batchId already committed")
     sweepUnmarkedSnapshots()
     val prev = state.coveredUpTo
@@ -235,8 +234,9 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     // deleted key (for tombstones already PURGED by earlier compactions
     // the caller must pass a corpus that no longer contains the key —
     // i.e. one derived from the maintained rows, the normal refit input)
-    fold.snapshotRows(antiTombstones(rows, liveDels), batchId)
-      .write.mode("overwrite").parquet(s"$root/base/$batchId")
+    val rel = relations.head
+    rel.fold.snapshotRows(antiTombstones(rows, liveDels), batchId)
+      .write.mode("overwrite").parquet(s"${baseDir(rel)}/$batchId")
     val next = state.withCommitted(batchId).rolledUp(batchId)
     val extra = if (extraJson.isEmpty) "" else s",$extraJson"
     CommitMarkers.commit(spark, baseMetaDir, batchId,
@@ -261,14 +261,15 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     delIds.filter(id => cov.forall(id > _))
   }
 
-  private def rowsFrom(snapshot: Option[Long], tail: Seq[Long]): DataFrame = {
-    // delete batches have no dataDir shard — their ids leave the data fold
+  private def rowsFrom(rel: ShardLog.Relation, snapshot: Option[Long],
+      tail: Seq[Long]): DataFrame = {
+    // delete batches have no relation shards — their ids leave the fold
     val dels = liveDels
     val dataTail = if (dels.isEmpty) tail else tail.filterNot(dels.contains)
     val folded =
-      if (snapshot.isEmpty && dataTail.isEmpty) fold.empty(spark)
-      else fold.rows(spark, snapshot.map(b => s"$root/base/$b"),
-        dataTail.map(b => b -> s"$root/$dataDir/$b"))
+      if (snapshot.isEmpty && dataTail.isEmpty) rel.fold.empty(spark)
+      else rel.fold.rows(spark, snapshot.map(b => s"${baseDir(rel)}/$b"),
+        dataTail.map(b => b -> s"${dataDir(rel)}/$b"))
     antiTombstones(folded, dels)
   }
 
@@ -285,57 +286,47 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
       spark.read.parquet(dels.map(b => new Path(delsDir, b.toString).toString): _*),
       Seq(deleteKey), "left_anti")
 
-  /** Delete numeric entries <= `upTo` under `dir` (covered shards or
-    * rolled-up markers — including leftovers of an earlier compaction
-    * that crashed mid-sweep). */
-  private def sweepCovered(dir: Path, upTo: Long, recursive: Boolean): Unit =
+  /** Delete numeric entries under `dir` whose id satisfies `drop` (never
+    * let an unparsable name fall through a vacuous-truth delete). */
+  private def sweep(dir: Path, recursive: Boolean)(drop: Long => Boolean): Unit =
     if (fs.exists(dir)) {
       fs.listStatus(dir).foreach { st =>
         scala.util.Try(st.getPath.getName.toLong).toOption match {
-          case Some(id) => if (id <= upTo) fs.delete(st.getPath, recursive)
+          case Some(id) => if (drop(id)) fs.delete(st.getPath, recursive)
           case None => ()
         }
       }
     }
 
-  /** Sweep UNMARKED `base/<b>` debris (a crash between a snapshot write
-    * and its basemeta commit) — numeric names only (never let an
-    * unparsable name fall through a vacuous-truth delete). Runs before
-    * each new snapshot is written. */
+  /** Sweep UNMARKED snapshot debris (a crash between the snapshot writes
+    * and their basemeta commit) in every relation. Runs before each new
+    * snapshot is written. */
   private def sweepUnmarkedSnapshots(): Unit = {
     val marked = compactedIds.toSet
-    val baseDir = new Path(s"$root/base")
-    if (fs.exists(baseDir)) {
-      fs.listStatus(baseDir).foreach { st =>
-        scala.util.Try(st.getPath.getName.toLong).toOption match {
-          case Some(id) => if (!marked.contains(id)) fs.delete(st.getPath, true)
-          case None => ()
-        }
-      }
-    }
+    relations.foreach(rel => sweep(new Path(baseDir(rel)), recursive = true)(id => !marked(id)))
   }
 
   /** The ONE-CYCLE-DEFERRED sweep after a snapshot at `upTo` committed
-    * with `prev` as the previous snapshot: shards <= prev (NOT <= upTo —
-    * a serving plan resolved against base/prev + the tail must survive
-    * this compaction), rolled-up meta markers <= upTo (plans never read
-    * markers; loadState ignores leftovers), and snapshots STRICTLY OLDER
-    * than prev (base/prev itself survives one more cycle for the same
-    * reason as its shards). Re-running after a crashed sweep is safe:
-    * every step is a delete of already-unreachable entries. */
+    * with `prev` as the previous snapshot: rolled-up meta markers <= upTo
+    * FIRST (plans never read markers; loadState ignores leftovers), then
+    * shards and tombstones <= prev (NOT <= upTo — a serving plan resolved
+    * against base/prev + the tail must survive this compaction), then
+    * snapshots STRICTLY OLDER than prev, marker before files (base/prev
+    * itself survives one more cycle for the same reason as its shards).
+    * Markers go before the files they name, so a crash mid-sweep never
+    * leaves a marker without its shards; re-running after a crashed
+    * sweep is safe: every step deletes already-unreachable entries. */
   private def sweepDeferred(prev: Option[Long], upTo: Long): Unit = {
-    prev.foreach(p => sweepCovered(new Path(s"$root/$dataDir"), p, recursive = true))
-    sweepCovered(metaDir, upTo, recursive = false)
+    sweep(metaDir, recursive = false)(_ <= upTo)
     prev.foreach { p =>
+      relations.foreach(rel => sweep(new Path(dataDir(rel)), recursive = true)(_ <= p))
       // tombstones <= prev are folded into base/prev (the rows are gone
       // there) AND into base/upTo — the key shards have nothing left to
       // mask; this sweep completes the physical purge
-      sweepCovered(delsDir, p, recursive = true)
+      sweep(delsDir, recursive = true)(_ <= p)
       delIdsMemo = delIds.filter(_ > p)
-      compactedIds.filter(_ < p).foreach { b =>
-        fs.delete(new Path(s"$root/base/$b"), true)
-        fs.delete(new Path(baseMetaDir, b.toString), false)
-      }
+      sweep(baseMetaDir, recursive = false)(_ < p)
+      relations.foreach(rel => sweep(new Path(baseDir(rel)), recursive = true)(_ < p))
     }
   }
 
@@ -343,9 +334,12 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     sweepUnmarkedSnapshots()
     if (compactedIds.contains(upTo)) return // snapshot already covers the log
     val prev = state.coveredUpTo
-    graft.operators.Jobs.labeled(spark, s"shardlog compact $dataDir upTo=$upTo") {
-      fold.snapshotRows(rowsFrom(prev, state.tail), upTo)
-        .write.mode("overwrite").parquet(s"$root/base/$upTo")
+    graft.operators.Jobs.labeled(spark,
+        s"shardlog compact ${relations.map(_.dataPath).mkString(",")} upTo=$upTo") {
+      relations.foreach { rel =>
+        rel.fold.snapshotRows(rowsFrom(rel, prev, state.tail), upTo)
+          .write.mode("overwrite").parquet(s"${baseDir(rel)}/$upTo")
+      }
     }
     // the marker carries the covered COUNT — with the covered meta/<b>
     // files deleted below, this is the only surviving record of how many
@@ -359,13 +353,22 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     sweepDeferred(prev, upTo)
   }
 
-  /** All committed rows — the latest compacted snapshot plus the shard
-    * tail, resolved from the CACHED state at plan time. Safe to execute
-    * concurrently with ONE later compaction (see class doc). */
-  def currentRows(): DataFrame = rowsFrom(state.coveredUpTo, state.tail)
+  /** All committed rows of `rel` — the latest compacted snapshot plus the
+    * shard tail, resolved from the CACHED state at plan time. Safe to
+    * execute concurrently with ONE later compaction (see class doc). */
+  def currentRows(rel: ShardLog.Relation = relations.head): DataFrame =
+    rowsFrom(rel, state.coveredUpTo, state.tail)
 }
 
 private[streaming] object ShardLog {
+
+  /** One relation of a batch: its shards live in `<name>/<dataDir>/<b>`
+    * and its snapshots in `<name>/base/<b>` under the log root (an empty
+    * `name` is the root itself), folded by `fold`. */
+  final case class Relation(dataDir: String, fold: Fold, name: String = "") {
+    private[ShardLog] def dataPath: String = if (name.isEmpty) dataDir else s"$name/$dataDir"
+    private[ShardLog] def basePath: String = if (name.isEmpty) "base" else s"$name/base"
+  }
 
   /**
    * How the standing rows FOLD out of (latest snapshot, post-snapshot

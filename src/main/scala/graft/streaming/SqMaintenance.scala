@@ -28,8 +28,8 @@ import graft.operators.SqIndex
 final class SqMaintenance(spark: SparkSession, root: String,
     dims: Int = 64, compactEvery: Int = 64) {
 
-  private val log = new ShardLog(spark, root, "codes", compactEvery,
-    new ShardLog.AppendFold(Seq("vec_id", "codes", "recon2")),
+  private val log = new ShardLog(spark, root, compactEvery, Seq(ShardLog.Relation("codes",
+    new ShardLog.AppendFold(Seq("vec_id", "codes", "recon2")))),
     // ordinary compactions must not lose the refit generation
     () => s""""gen":$generation""", deleteKey = "vec_id")
 
@@ -129,11 +129,11 @@ final class SqMaintenance(spark: SparkSession, root: String,
         val (fitted, codes) = SqIndex.buildSq(embs, dims)
         publishStats(0, fitted)
         statsMemo = fitted
-        log.commitShard(batchId, codes, s"""{"dims":$dims}""")
+        log.commitShard(batchId, Seq(codes), s"""{"dims":$dims}""")
         org.apache.spark.sql.graftbridge.CheckpointBridge.release(codes)
         return
       } else stats()
-    log.commitShard(batchId, SqIndex.encodeBatch(embs, st), s"""{"dims":$dims}""")
+    log.commitShard(batchId, Seq(SqIndex.encodeBatch(embs, st)), s"""{"dims":$dims}""")
   }
 
   /**

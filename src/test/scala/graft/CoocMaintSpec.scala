@@ -109,24 +109,28 @@ class CoocMaintSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.currentHistograms().where(delPred).count() == 0)
   }
 
-  test("crash BETWEEN the two log commits (pairs landed, users marker " +
-      "gone): replay recomputes the identical delta and converges") {
+  test("crash before the batch marker (every relation shard written, " +
+      "marker absent): a fresh instance reads none of them; replay converges") {
     val root = Files.createTempDirectory("cooc_torn").toString
     val m = new CoocMaintenance(spark, root, compactEvery = 4)
-    m.processBatch(0L, chunk(0))
-    m.processBatch(1L, chunk(1))
-    // simulate the crash window: pairs/ has batch 1's shard+marker, the
-    // authoritative users/ marker vanishes — exactly the state a death
-    // between the two commits leaves behind
-    val marker = new java.io.File(s"$root/users/meta/1")
-    assert(marker.exists)
-    assert(marker.delete())
+    (0 until 3).foreach(c => m.processBatch(c.toLong, chunk(c)))
+    // the state a death just before batch 2's one marker leaves behind:
+    // both relation shards durable, no marker
+    assert(new java.io.File(s"$root/meta/2").delete())
+    assert(Seq("pairs", "users").forall(r =>
+      new java.io.File(s"$root/$r/delta/2/_SUCCESS").exists))
     val m2 = new CoocMaintenance(spark, root, compactEvery = 4)
-    assert(!m2.isCommitted(1L), "users marker is the authority")
-    // the replay recomputes batch 1's pair delta from the PRE-BATCH user
-    // fold (batch 1's histogram never committed), so the already-durable
-    // pair shard short-circuits against an identical value
-    m2.processBatch(1L, chunk(1))
+    assert(!m2.isCommitted(2L), "the marker is the only record of a commit")
+    val firstTwo = chunk(0).unionByName(chunk(1))
+    assert(counts(m2.currentCounts()) == counts(Cooccurrence.coocCounts(firstTwo)),
+      "the unmarked pair shard must not be read")
+    def histos(df: DataFrame) = df.select("user", "item", "n").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
+    assert(histos(m2.currentHistograms()) ==
+      histos(Cooccurrence.perUserItemCounts(firstTwo)),
+      "the unmarked user shard must not be read")
+    // the replay recomputes batch 2's pair delta from the pre-batch user
+    // fold and overwrites both shards
     m2.processBatch(2L, chunk(2))
     assert(counts(m2.currentCounts()) == counts(Cooccurrence.coocCounts(inter)))
   }

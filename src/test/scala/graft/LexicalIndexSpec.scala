@@ -66,20 +66,20 @@ class LexicalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scores(b.bm25(terms)) == scores(Retrieval.bm25(docs, terms)))
   }
 
-  test("crash BETWEEN the two log commits (doclens landed, postings " +
-      "marker gone): replay converges to the uninterrupted run") {
+  test("crash before the batch marker (every relation shard written, " +
+      "marker absent): a fresh instance reads none of them; replay converges") {
     val root = Files.createTempDirectory("lex_torn").toString
     val m = new LexicalIndexMaintenance(spark, root, compactEvery = 4)
-    m.processBatch(0L, chunk(0))
-    m.processBatch(1L, chunk(1))
-    // the authoritative postings marker vanishes: the state a death
-    // after the doclens commit leaves behind
-    val marker = new java.io.File(s"$root/postings/meta/1")
-    assert(marker.exists)
-    assert(marker.delete())
+    (0 until 3).foreach(c => m.processBatch(c.toLong, chunk(c)))
+    // the state a death just before batch 2's one marker leaves behind
+    assert(new java.io.File(s"$root/meta/2").delete())
+    assert(Seq("postings", "doclens").forall(r =>
+      new java.io.File(s"$root/$r/seg/2/_SUCCESS").exists))
     val m2 = new LexicalIndexMaintenance(spark, root, compactEvery = 4)
-    assert(!m2.isCommitted(1L), "postings marker is the authority")
-    m2.processBatch(1L, chunk(1)) // doclens short-circuits, postings re-commits
+    assert(!m2.isCommitted(2L), "the marker is the only record of a commit")
+    // N, avgdl and df all exclude the unmarked batch's documents
+    val firstTwo = docs.where(pmod(col("doc_id"), lit(3)) =!= 2)
+    assert(scores(m2.bm25(terms)) == scores(Retrieval.bm25(firstTwo, terms)))
     m2.processBatch(2L, chunk(2))
     assert(scores(m2.bm25(terms)) == scores(Retrieval.bm25(docs, terms)))
   }

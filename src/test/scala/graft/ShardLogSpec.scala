@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Dedup
-import graft.streaming.{AnnMaintenance, IndexMaintenance}
+import graft.streaming.{AnnMaintenance, CoocMaintenance, IndexMaintenance, LexicalIndexMaintenance}
 
 /**
  * SERVE-WHILE-COMPACT contract of the shared shard log (r15 verdict #1):
@@ -17,7 +17,10 @@ import graft.streaming.{AnnMaintenance, IndexMaintenance}
  * across ONE concurrent compaction, because covered shards and the
  * superseded snapshot are swept one compaction cycle late. Exercised
  * through both fold semantics: append (AnnMaintenance) and latest-wins
- * delta (IndexMaintenance).
+ * delta (IndexMaintenance). The multi-relation cases run through the
+ * lexical index (postings, doclens, positions) and the co-occurrence
+ * matrix (pairs, users): one marker per batch, one basemeta marker per
+ * compaction, one tombstone per delete, whatever the relation count.
  */
 class ShardLogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -197,5 +200,88 @@ class ShardLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(comps(m.currentIndex()) ==
       comps(Dedup.simhashComponents(
         docs.where(pmod(col("doc_id"), lit(3)) =!= 2), 3)))
+  }
+
+  private val words = Vector("table", "scan", "key", "value", "row", "merge")
+
+  /** Batch b of a tiny corpus: docs 3b, 3b+1, 3b+2. */
+  private def lexBatch(b: Int): DataFrame = {
+    val session = spark; import session.implicits._
+    (0 until 3).map { i =>
+      val id = b * 3 + i
+      (id.toLong, (0 until 4).map(j => words((id + j * j) % words.size)).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  private def docIds(df: DataFrame): Set[Long] =
+    df.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+
+  private def lexRelations(m: LexicalIndexMaintenance): Seq[DataFrame] =
+    Seq(m.currentPostings(), m.currentDoclens(), m.currentPositions())
+
+  private def numeric(dir: java.io.File): Set[String] =
+    Option(dir.list()).toSeq.flatten.filter(_.forall(_.isDigit)).toSet
+
+  test("multi-relation batch is all-or-nothing: without its marker no " +
+      "relation shows the batch, with it every relation does") {
+    val root = Files.createTempDirectory("slog_multi").toString
+    val m = new LexicalIndexMaintenance(spark, root, compactEvery = 8, positions = true)
+    m.processBatch(0L, lexBatch(0)); m.processBatch(1L, lexBatch(1))
+    assert(lexRelations(m).map(docIds).forall(_ == (0L until 6L).toSet))
+    // drop batch 1's one marker: all three relation shards stay on disk
+    assert(new java.io.File(s"$root/meta/1").delete())
+    val fresh = new LexicalIndexMaintenance(spark, root, compactEvery = 8, positions = true)
+    assert(!fresh.isCommitted(1L))
+    assert(lexRelations(fresh).map(docIds).forall(_ == (0L until 3L).toSet),
+      "an unmarked batch must be invisible in every relation")
+    fresh.processBatch(1L, lexBatch(1))
+    assert(lexRelations(fresh).map(docIds).forall(_ == (0L until 6L).toSet))
+  }
+
+  test("one compaction snapshots every relation under one basemeta marker") {
+    val root = Files.createTempDirectory("slog_multi_compact").toString
+    val m = new LexicalIndexMaintenance(spark, root, compactEvery = 2, positions = true)
+    m.processBatch(0L, lexBatch(0)); m.processBatch(1L, lexBatch(1))
+    assert(m.coveredUpTo.contains(1L))
+    assert(numeric(new java.io.File(s"$root/basemeta")) == Set("1"))
+    Seq("postings", "doclens", "positions").foreach { r =>
+      assert(new java.io.File(s"$root/$r/base/1/_SUCCESS").exists, s"$r snapshot missing")
+      assert(!new java.io.File(s"$root/$r/basemeta").exists, s"$r has its own basemeta")
+    }
+    val fresh = new LexicalIndexMaintenance(spark, root, compactEvery = 2, positions = true)
+    assert(fresh.coveredUpTo.contains(1L) && fresh.committedCount == 2L)
+    assert(lexRelations(fresh).map(docIds).forall(_ == (0L until 6L).toSet))
+  }
+
+  test("one tombstone masks every relation") {
+    val root = Files.createTempDirectory("slog_multi_del").toString
+    val m = new LexicalIndexMaintenance(spark, root, compactEvery = 8, positions = true)
+    m.processBatch(0L, lexBatch(0)); m.processBatch(1L, lexBatch(1))
+    val session = spark; import session.implicits._
+    m.deleteBatch(2L, Seq(1L, 4L).toDF("doc_id"))
+    assert(numeric(new java.io.File(s"$root/dels")) == Set("2"))
+    Seq("postings", "doclens", "positions").foreach { r =>
+      assert(!new java.io.File(s"$root/$r/dels").exists, s"$r has its own tombstones")
+    }
+    val want = (0L until 6L).toSet -- Set(1L, 4L)
+    assert(lexRelations(m).map(docIds).forall(_ == want))
+    val fresh = new LexicalIndexMaintenance(spark, root, compactEvery = 8, positions = true)
+    assert(lexRelations(fresh).map(docIds).forall(_ == want))
+  }
+
+  test("after N ingest batches the root's meta/ holds N markers and no " +
+      "relation directory has a meta/") {
+    val session = spark; import session.implicits._
+    val root = Files.createTempDirectory("slog_multi_meta").toString
+    val m = new CoocMaintenance(spark, root, compactEvery = 8)
+    (0 until 3).foreach { b =>
+      m.processBatch(b.toLong, (0 until 4).map(u => (u, (u + b) % 5)).toDF("user", "item"))
+    }
+    assert(numeric(new java.io.File(s"$root/meta")) == Set("0", "1", "2"))
+    Seq("pairs", "users").foreach { r =>
+      assert(!new java.io.File(s"$root/$r/meta").exists, s"$r has its own marker log")
+      assert(numeric(new java.io.File(s"$root/$r/delta")) == Set("0", "1", "2"))
+    }
+    assert(m.committedCount == 3L)
   }
 }
