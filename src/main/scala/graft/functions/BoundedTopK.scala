@@ -25,9 +25,13 @@ final class IntDoubleTopK(val capacity: Int) extends Serializable {
   def leastValue: Int = values(1)
 
   /** score-asc, then value-desc: the heap keeps the *largest* K, so the
-    * "least" element (the eviction candidate) is the min score / max value. */
-  @inline private def lt(s1: Double, v1: Int, s2: Double, v2: Int): Boolean =
-    s1 < s2 || (s1 == s2 && v1 > v2)
+    * "least" element (the eviction candidate) is the min score / max value.
+    * Scores compare as Spark SQL orders doubles: NaN above every number
+    * and equal to NaN, -0.0 equal to 0.0. */
+  @inline private def lt(s1: Double, v1: Int, s2: Double, v2: Int): Boolean = {
+    val c = if (s1 == s2) 0 else java.lang.Double.compare(s1, s2)
+    c < 0 || (c == 0 && v1 > v2)
+  }
 
   def offer(value: Int, score: Double): Unit =
     if (count < capacity) add(value, score)
@@ -81,7 +85,7 @@ final class IntDoubleTopK(val capacity: Int) extends Serializable {
     val out = new Array[(Int, Double)](count)
     var i = 1
     while (i <= count) { out(i - 1) = (values(i), scores(i)); i += 1 }
-    out.sortBy { case (v, s) => (-s, v) }
+    out.sortWith { case ((v1, s1), (v2, s2)) => lt(s2, v2, s1, v1) }
   }
 
   def merge(other: IntDoubleTopK): IntDoubleTopK = {

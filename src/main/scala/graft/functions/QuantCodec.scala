@@ -327,9 +327,12 @@ case class IvfProbeTop(child: Expression, flatCents: Array[Long], cn2: Array[Lon
     val used = new Array[Boolean](nLists)
     var r = 0
     while (r < take) {
-      var bestD = Long.MaxValue
-      var bestC = -1
-      var i = 0
+      // seed with the first unused list, so a round whose remaining
+      // distances all sit at Long.MaxValue still picks a list
+      var bestC = 0
+      while (used(bestC)) bestC += 1
+      var bestD = dist(bestC)
+      var i = bestC + 1
       while (i < nLists) {
         if (!used(i) && dist(i) < bestD) { bestD = dist(i); bestC = i }
         i += 1
@@ -363,6 +366,9 @@ case class IvfCentroidRow(child: Expression, flatCents: Array[Long], dims: Int)
 
   def kernel(a: Any): ArrayData = {
     val cl = a.asInstanceOf[Number].intValue()
+    val nLists = flatCents.length / dims
+    if (cl < 0 || cl >= nLists) throw new IllegalArgumentException(
+      s"cluster id $cl is outside [0, $nLists): the stored assignment does not match the centroids")
     val out = new Array[Long](dims)
     System.arraycopy(flatCents, cl * dims, out, 0, dims)
     UnsafeArrayData.fromPrimitiveArray(out)
@@ -432,7 +438,11 @@ object QuantCodecCols {
   def sqReconDot(qqv: Column, codes: Column, mins: Array[Long], maxs: Array[Long]): Column =
     column(SqReconDot(expression(qqv), expression(codes), mins, maxs))
 
-  /** Rounded [s][code][dim] grid + per-codeword |c|^2 from the double books. */
+  /** [s][code][dim] grid + per-codeword |c|^2 from the double books.
+    * Books hold integers carried as doubles (PqIndex.fitCodebooks: exact
+    * long sums, truncating division); a fractional codeword is refused,
+    * because rounding it here would disagree with the truncating
+    * literal lookups these kernels replaced. */
   private[graft] def flattenBooks(books: Array[Array[Array[Double]]]): (Array[Long], Array[Long], Int, Int, Int) = {
     val m = books.length
     val ksub = books(0).length
@@ -446,7 +456,10 @@ object QuantCodecCols {
         var n2 = 0L
         var d = 0
         while (d < subDim) {
-          val q = math.round(books(s)(c)(d))
+          val x = books(s)(c)(d)
+          require(x == math.rint(x),
+            s"codebook $s codeword $c dim $d is $x: PQ codebooks must be integral")
+          val q = math.round(x)
           flat((s * ksub + c) * subDim + d) = q
           n2 += q * q
           d += 1

@@ -1,16 +1,18 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, LongMap}
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StatsBridge
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
-import graft.operators.{Cooccurrence, Sampling, Tables}
+import graft.functions.{IntDoubleTopK, LogLikelihood}
+import graft.operators.Sampling
 import graft.operators.Sampling.{CoocDelta, Interaction, ItemCount, UserState}
 
 /**
@@ -34,7 +36,7 @@ object StreamingCooc {
     * keyed state stays co-partitioned RDDs (width: the session's
     * shuffle.partitions); `itemState`, `userState` and `deltas` are
     * Dataset views of it, and assigning one replaces that state. */
-  final class State(spark: SparkSession) {
+  final class State(private[streaming] val spark: SparkSession) {
     import spark.implicits._
     private[streaming] val window = new Sampling.WindowState(spark.sparkContext,
       new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
@@ -56,9 +58,9 @@ object StreamingCooc {
     def userState_=(ds: Dataset[UserState]): Unit =
       window.userSt = ds.rdd.map(u => (u.user.toLong, (u.total, u.history))).partitionBy(window.part)
     /** The accumulated matrix as its un-netted delta rows. */
-    def deltas: Dataset[CoocDelta] = StatsBridge.fromRows(spark,
-      spark.sparkContext.union(increments.toSeq).coalesce(window.part.numPartitions),
-      deltaSchema).as[CoocDelta]
+    def deltas: Dataset[CoocDelta] = StatsBridge.fromRows(spark, deltaRows, deltaSchema).as[CoocDelta]
+    private[streaming] def deltaRows: RDD[InternalRow] =
+      spark.sparkContext.union(increments.toSeq).coalesce(window.part.numPartitions)
     def deltas_=(ds: Dataset[CoocDelta]): Unit = {
       increments.clear()
       increments += ds.rdd.map(d => InternalRow(d.item, d.other, d.inc))
@@ -208,45 +210,125 @@ object StreamingCooc {
     Some(last)
   }
 
+  /** Partitions packed `(item << 32 | other)` cell keys by item. */
+  private final class ItemPartitioner(n: Int) extends Partitioner {
+    override def numPartitions: Int = n
+    override def getPartition(key: Any): Int =
+      Math.floorMod((key.asInstanceOf[Long] >> 32).toInt, n)
+  }
+
+  /** Item `i` goes to the first partition whose upper bound is >= i. */
+  private final class ItemRangePartitioner(bounds: Array[Int]) extends Partitioner {
+    override def numPartitions: Int = bounds.length + 1
+    override def getPartition(key: Any): Int = {
+      val at = java.util.Arrays.binarySearch(bounds, key.asInstanceOf[Int])
+      if (at >= 0) at else -at - 1
+    }
+  }
+
+  /** `llrTopKFromCounts`' output schema over the netted deltas. */
+  private val topKSchema = StructType(Seq(
+    StructField("item", IntegerType, nullable = false),
+    StructField("rnk", IntegerType, nullable = false),
+    StructField("other", IntegerType, nullable = false),
+    StructField("score", DoubleType, nullable = true)))
+
   /** Rescore the accumulated matrix: row sums first, then LLR top-K.
+    * The result equals `Cooccurrence.llrTopKFromCounts` over the netted
+    * deltas (cells with count > 0), row for row and in its `(item, rnk)`
+    * order.
     *
-    * `devReconcile` (default: the `graft.dev.reconcile` system property)
-    * mirrors the reference's DEV-mode row-sum reconciliation
+    * Two Spark jobs, the per-item loop of the reference's rescorer
+    * (ItemRowRescorerTwoInputStreamOperator.java:116-142) over one
+    * shuffle. Job 1 runs HERE, when `rescore` is called: it nets the
+    * increments on packed `(item, other)` keys into item-partitioned
+    * cells (map-side combine) and returns each item's row sum to the
+    * driver (RowSumAggregator.java:50,67). Job 2 runs when the returned
+    * DataFrame is read: it reuses job 1's shuffle output, scores each
+    * cell against the row sums and the total (k22 as in
+    * ItemRowRescorerTwoInputStreamOperator.java:236-239), keeps each
+    * item's top-K in a bounded heap and range-partitions the rows by
+    * item, with bounds from the row-sum keys. Nothing is cached.
+    *
+    * `metrics` reads its counters off job 1: the items with a row and
+    * the net row-sum mass. `devReconcile` (default: the
+    * `graft.dev.reconcile` system property) mirrors the reference's
+    * DEV-mode row-sum reconciliation
     * (ItemRowRescorerTwoInputStreamOperator.java:183-193): the row sums
-    * derived from the raw delta stream must equal the row sums of the
-    * materialized matrix. A mismatch means a cell went negative (a
-    * refund/eviction bug) and fails loudly instead of mis-scoring. */
+    * of the raw delta stream differ from those of the matrix exactly when
+    * a netted cell is negative (a refund/eviction bug), which job 1
+    * reports and which then fails loudly instead of mis-scoring. */
   def rescore(st: State, k: Int,
       devReconcile: Boolean = java.lang.Boolean.getBoolean("graft.dev.reconcile"),
       metrics: Option[Sampling.PipelineMetrics] = None): DataFrame = {
-    val counts = st.deltas
-      .groupBy(col("item"), col("other"))
-      .agg(sum(col("inc")).as("cnt"))
-      .where(col("cnt") > 0)
-    // harness parity: one rescored-item-row per item with a pending delta
-    // at this flush (ItemRowRescorerTwoInputStreamOperator.java:60,169)
-    // plus the net row-sum mass (RowSumAggregator.java:50,67) — ONE
-    // instrumented-mode-only job for both, like the DEV reconcile below
+    require(k > 0, s"k must be positive, got $k")
+    val spark = st.spark
+    val n = st.window.part.numPartitions
+    val cells = st.deltaRows
+      .map(r => ((r.getInt(0).toLong << 32) | (r.getInt(1) & 0xffffffffL), r.getInt(2).toLong))
+      .reduceByKey(new ItemPartitioner(n), _ + _)
+    // job 1: per partition, the items' row sums (over cells > 0) and the
+    // first negative cell
+    val parts = cells.mapPartitions { it =>
+      val sums = new LongMap[Long]()
+      var neg: Option[(Int, Int, Long)] = None
+      it.foreach { case (key, cnt) =>
+        if (cnt > 0) {
+          val item = (key >> 32).toInt
+          sums(item) = sums.getOrElse(item, 0L) + cnt
+        } else if (cnt < 0 && neg.isEmpty) neg = Some(((key >> 32).toInt, key.toInt, cnt))
+      }
+      Iterator.single((sums.toArray.map { case (i, s) => (i.toInt, s) }, neg))
+    }.collect()
+    if (devReconcile) parts.flatMap(_._2).headOption.foreach { case (item, other, cnt) =>
+      throw new IllegalArgumentException(s"row-sum reconciliation failed (item=$item: " +
+        s"cell ($item, $other) nets to $cnt) — a cooc cell went negative")
+    }
+    val (items, rowSums) = parts.flatMap(_._1).sortBy(_._1).unzip
+    val total = rowSums.sum
     metrics.foreach { m =>
-      val r = counts.agg(
-        count_distinct(col("item")).as("n_items"),
-        sum(col("cnt")).as("mass")).head()
-      if (!r.isNullAt(0)) m.rescoredItems.add(r.getLong(0))
-      if (!r.isNullAt(1)) m.rowSumMass.add(r.getLong(1))
+      m.rescoredItems.add(items.length.toLong)
+      m.rowSumMass.add(total)
     }
-    if (devReconcile) {
-      val fromDeltas = st.deltas.groupBy(col("item")).agg(sum(col("inc")).as("delta_sum"))
-      val fromMatrix = counts.groupBy(col("item")).agg(sum(col("cnt")).as("matrix_sum"))
-      val bad = fromDeltas.join(fromMatrix, Seq("item"), "full_outer")
-        .where(coalesce(col("delta_sum"), lit(0L)) =!= coalesce(col("matrix_sum"), lit(0L)))
-        .limit(1).collect()
-      require(bad.isEmpty,
-        s"row-sum reconciliation failed (item=${bad.headOption.map(_.get(0)).orNull}: " +
-          s"delta-sum=${bad.headOption.map(_.get(1)).orNull}, " +
-          s"matrix-sum=${bad.headOption.map(_.get(2)).orNull}) — a cooc cell went negative")
+    def rowSum(item: Int): Long = {
+      val at = java.util.Arrays.binarySearch(items, item)
+      if (at >= 0) rowSums(at) else -1L
     }
-    Cooccurrence.llrTopKFromCounts(counts, k)
+    val p = math.max(1, math.min(n, items.length))
+    val bounds = Array.tabulate(p - 1)(j => items(((j + 1).toLong * items.length / p - 1).toInt))
+    // job 2 (lazy): score, keep each item's top-K, range-partition by item
+    val topK = cells.mapPartitions { it =>
+      val heaps = new LongMap[IntDoubleTopK]()
+      it.foreach { case (key, cnt) =>
+        if (cnt > 0) {
+          val item = (key >> 32).toInt
+          val other = key.toInt
+          val rsO = rowSum(other)
+          // the other item has no row: the inner join drops the cell
+          if (rsO >= 0) {
+            val k12 = rowSum(item) - cnt
+            val k21 = rsO - cnt
+            val k22 = total + cnt - k12 - k21
+            heaps.getOrElseUpdate(item, new IntDoubleTopK(k))
+              .offer(other, round4(LogLikelihood.logLikelihoodRatio(cnt, k12, k21, k22)))
+          }
+        }
+      }
+      heaps.iterator.map { case (item, h) => (item.toInt, h.dumpDescending()) }
+    }.repartitionAndSortWithinPartitions(new ItemRangePartitioner(bounds))
+      .flatMap { case (item, top) =>
+        top.iterator.zipWithIndex.map { case ((other, score), r) =>
+          InternalRow(item, r + 1, other, score)
+        }
+      }
+    StatsBridge.fromRows(spark, topK, topKSchema)
   }
+
+  /** Catalyst's `round(_, 4)` for doubles (HALF_UP over the decimal
+    * string form; NaN and infinities pass through). */
+  private def round4(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
 
   /**
    * End-to-end streaming run over the events table: file-source stream ->

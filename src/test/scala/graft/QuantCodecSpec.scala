@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.QuantCodecCols
+import graft.functions.{IvfCentroidRow, IvfProbeTop, QuantCodecCols}
 import graft.operators.Similarity
 
 /**
@@ -244,5 +245,42 @@ class QuantCodecSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.unset("spark.sql.codegen.wholeStage")
       spark.conf.unset("spark.sql.codegen.factoryMode")
     }
+  }
+
+  // ---- degenerate inputs ----
+
+  test("IvfProbeTop still picks a list when every remaining distance is Long.MaxValue") {
+    // two zero-vector lists whose |c|^2 sits at Long.MaxValue: against a
+    // zero query, after list 2 every remaining distance is the sentinel
+    val probe = IvfProbeTop(Literal(0), new Array[Long](3 * 2),
+      Array(Long.MaxValue, Long.MaxValue, 0L), dims = 2, nProbe = 3)
+    val q = UnsafeArrayData.fromPrimitiveArray(Array(0L, 0L))
+    assert(probe.kernel(q).toIntArray().toSeq == Seq(2, 0, 1))
+  }
+
+  test("IvfCentroidRow refuses a cluster id outside [0, nLists) with a descriptive error") {
+    val cents = randomCents(6)
+    val row = IvfCentroidRow(Literal(0), QuantCodecCols.flattenCents(cents)._1, dims)
+    Seq(-1, 6).foreach { cl =>
+      val ex = intercept[IllegalArgumentException](row.kernel(Integer.valueOf(cl)))
+      assert(ex.getMessage.contains(s"cluster id $cl is outside [0, 6)"), ex.getMessage)
+    }
+    assert(row.kernel(Integer.valueOf(5)).toLongArray().toSeq == cents(5).map(_.toLong).toSeq)
+    // through a plan: the executor reports the same error, not an AIOOBE
+    val bad = corpus(4).withColumn("cluster", (col("vec_id") * 0 + 6).cast("int"))
+      .select(QuantCodecCols.ivfCentroidRow(col("cluster"), cents))
+    val ex = intercept[Exception](bad.collect())
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.toString)
+    assert(msgs.exists(_.contains("cluster id 6 is outside [0, 6)")), ex.toString)
+  }
+
+  test("PQ codebooks must be integral: a fractional codeword is refused, not rounded") {
+    val books = randomBooks()
+    assert(QuantCodecCols.flattenBooks(books)._1.toSeq ==
+      books.flatten.flatten.map(_.toLong).toSeq)
+    books(2)(3)(1) = 2.5
+    val ex = intercept[IllegalArgumentException](QuantCodecCols.pqEncode(col("qv"), books))
+    assert(ex.getMessage.contains("codebook 2 codeword 3 dim 1 is 2.5"), ex.getMessage)
+    assert(ex.getMessage.contains("integral"))
   }
 }

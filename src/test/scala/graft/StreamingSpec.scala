@@ -147,6 +147,88 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(StreamingCooc.rescore(new StreamingCooc.State(spark), 5).count() == 0L)
   }
 
+  /** The binding-cuts fixture's streamed state: sf0.001, one day per
+    * microbatch, fMax 3, kMax 4. */
+  private lazy val bindingCutsState: StreamingCooc.State = {
+    val sp = spark; import sp.implicits._
+    val st = new StreamingCooc.State(spark)
+    windowBatches(86400000L).zipWithIndex.foreach { case (b, i) =>
+      StreamingCooc.processBatch(st, b.toDS(), i.toLong, 3, 4, 42L)
+    }
+    st
+  }
+
+  /** The Catalyst rescore over the same netted matrix. */
+  private def rescoreOracle(st: StreamingCooc.State, k: Int): DataFrame =
+    Cooccurrence.llrTopKFromCounts(st.deltas.groupBy(col("item"), col("other"))
+      .agg(sum(col("inc")).as("cnt")).where(col("cnt") > 0), k)
+
+  private def assertRescoreParity(st: StreamingCooc.State, k: Int): Unit = {
+    val got = StreamingCooc.rescore(st, k)
+    val want = rescoreOracle(st, k)
+    assert(got.schema == want.schema)
+    val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+    assert(g == w, s"k=$k: ${g.size} rows vs the oracle's ${w.size}; first difference " +
+      g.zipAll(w, null, null).find { case (a, b) => a != b })
+  }
+
+  test("rescore == llrTopKFromCounts over the netted deltas, row for row (binding cuts)") {
+    val st = bindingCutsState
+    assert(st.deltas.where(col("inc") < 0).count() > 0L, "reservoir never replaced")
+    Seq(1, 3, 10).foreach(assertRescoreParity(st, _))
+  }
+
+  test("rescore == llrTopKFromCounts on ties, short rows, dropped and zero cells, NaN, empty") {
+    val sp = spark; import sp.implicits._
+    import graft.operators.Sampling.CoocDelta
+    def sym(a: Int, b: Int, n: Int) = Seq(CoocDelta(a, b, n), CoocDelta(b, a, n))
+    val st = new StreamingCooc.State(spark)
+    st.deltas = (
+      // item 1 co-occurs once with 2..5, which are alike: four tied scores
+      (2 to 5).flatMap(sym(1, _, 1)) ++
+      // a two-cell row (shorter than K) and a cell split over increments
+      sym(6, 7, 2) ++ sym(6, 8, 1) ++ Seq(CoocDelta(6, 7, 1), CoocDelta(7, 6, 1)) ++
+      // asymmetric: item 9 points at 99, which has no row -> dropped
+      Seq(CoocDelta(9, 99, 3), CoocDelta(9, 2, 1)) ++
+      // a cell that nets to 0 is not in the matrix
+      Seq(CoocDelta(1, 8, 2), CoocDelta(1, 8, -2)) ++
+      // k21 < 0 (row 11 is lighter than cell (10, 11)): an NaN score
+      Seq(CoocDelta(10, 11, 5), CoocDelta(11, 10, 1)) ++ sym(10, 12, 1)
+    ).toDS()
+    Seq(1, 2, 3, 10).foreach(assertRescoreParity(st, _))
+    val top = StreamingCooc.rescore(st, 10).collect()
+    assert(!top.exists(r => r.getInt(0) == 9 && r.getInt(2) == 99))
+    assert(!top.exists(r => r.getInt(0) == 1 && r.getInt(2) == 8))
+    assert(top.filter(_.getInt(0) == 1).map(_.getInt(2)).toSeq == Seq(2, 3, 4, 5))
+    assert(top.exists(r => r.getInt(0) == 10 && r.getDouble(3).isNaN))
+    assertRescoreParity(new StreamingCooc.State(spark), 5)
+  }
+
+  test("rescore submits at most two Spark jobs and caches nothing, in every mode") {
+    val sc = spark.sparkContext
+    val st = bindingCutsState
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      for (metrics <- Seq(false, true); dev <- Seq(false, true)) {
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+        val cached = sc.getPersistentRDDs.size
+        jobs.set(0)
+        val m = if (metrics) Some(new Sampling.PipelineMetrics(sc)) else None
+        assert(StreamingCooc.rescore(st, 10, devReconcile = dev, metrics = m).collect().nonEmpty)
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(sc)
+        assert(jobs.get() <= 2, s"metrics=$metrics devReconcile=$dev: ${jobs.get()} jobs")
+        assert(sc.getPersistentRDDs.size <= cached,
+          s"metrics=$metrics devReconcile=$dev: ${sc.getPersistentRDDs.size - cached} RDDs left cached")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("late/rescored accumulator parity: known late totals, user-late 0, rescored = matrix items") {
     val sp = spark; import sp.implicits._
     val m = new graft.operators.Sampling.PipelineMetrics(spark.sparkContext)
