@@ -63,7 +63,7 @@ import graft.operators.{AnnIndex, Similarity, Tables}
  * broadcasts; at |Q| ~ corpus the same plan degrades to a shuffled join
  * on `cluster` with parallelism nLists — the reason nLists follows the
  * ~sqrt(N) FAISS sizing rule at scale (IvfIndex.knnJoinFrom scaladoc;
- * KnnJoinScale measures the rule).
+ * PERF.md's round-16 kNN-join decade measured the rule).
  */
 object ExtQueries52 {
 

@@ -9,7 +9,7 @@ import graft.operators.Tables
  * Round 16: STREAMING kNN-GRAPH MAINTENANCE
  * ([[graft.streaming.KnnGraphMaintenance]]) — the full kNN graph is the
  * most expensive ANN read (every vector is a query; the batch build is
- * decade-measured in KnnJoinScale), which is exactly why a 100 TB
+ * decade-measured in PERF.md, round 16), which is exactly why a 100 TB
  * deployment cannot rebuild it per ingest batch. The maintenance loop
  * keeps it standing: forward edges from one batch-sized kNN join,
  * reverse edges routed through the static per-node probe table, both

@@ -42,7 +42,7 @@ object ConnectedComponents {
     * latency. Below the bound the driver does the same min-label fixpoint
     * in milliseconds over a ~tens-of-MB transient collect (the
     * bounded-artifact posture of the codebook/stats collects — the bound
-    * was raised 2^17 -> 2^19 after JobProfile showed sf0.1 refresh
+    * was raised 2^17 -> 2^19 after a per-job profile showed sf0.1 refresh
     * batches just over 2^17 still paying 4-5 distributed rounds for a
     * graph the driver solves in one); above it — the 100 TB regime —
     * the distributed loop is unchanged. Output is byte-identical: a

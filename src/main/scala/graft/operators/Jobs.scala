@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Job labeling (optimization-guide §1.5): multi-job operators set a
-  * phase description so profilers (graft.JobProfile) and the UI can
+  * phase description so the perfbench trace and the UI can
   * attribute wall time to the phase that scheduled it, not just the
   * outermost callsite. Descriptions are thread-local; the previous value
   * is restored so streaming foreachBatch labels survive. */

@@ -58,17 +58,11 @@ import graft.operators.Cooccurrence
  * a user's contribution is baked into sums).
  */
 final class CoocMaintenance(spark: SparkSession, root: String,
-    compactEvery: Int = 64) {
+    compactEvery: Int = 64)
+  extends MaintainedIndex(spark, root, compactEvery,
+    Seq(CoocMaintenance.pairs, CoocMaintenance.users)) {
 
-  private val pairs = ShardLog.Relation("delta",
-    new ShardLog.SumFold(Seq("item", "other"), "cnt"), "pairs")
-  private val users = ShardLog.Relation("delta",
-    new ShardLog.SumFold(Seq("user", "item"), "n"), "users")
-  private val log = new ShardLog(spark, root, compactEvery, Seq(pairs, users))
-
-  def committedIds: Seq[Long] = log.committedIds
-  def isCommitted(id: Long): Boolean = log.isCommitted(id)
-  def committedCount: Long = log.committedCount
+  import CoocMaintenance.{pairs, users}
 
   /** δ×δ / n×n: the batch co-occurrence algebra over one histogram
     * relation `(user, item, n)` — `Cooccurrence.coocCounts`' inner
@@ -111,8 +105,7 @@ final class CoocMaintenance(spark: SparkSession, root: String,
 
   /** Fold one ingest batch of interactions `(user, item, ...)` into the
     * standing matrix. Idempotent; O(batch · per-user activity). */
-  def processBatch(batchId: Long, inter: DataFrame): Unit = {
-    if (log.isCommitted(batchId)) return
+  def processBatch(batchId: Long, inter: DataFrame): Unit = once(batchId) {
     val delta = Cooccurrence
       .perUserItemCounts(inter.select(col("user"), col("item")))
       .localCheckpoint(true) // feeds the pair delta and the users shard
@@ -129,8 +122,7 @@ final class CoocMaintenance(spark: SparkSession, root: String,
   /** DELETE users' entire event contribution (takedown): one negative
     * delta per relation — ΔC = −(own-pair contribution), Δn = −n. Scores
     * downstream shift exactly as if the users never existed. */
-  def deleteBatch(batchId: Long, userIds: DataFrame): Unit = {
-    if (log.isCommitted(batchId)) return
+  override def deleteBatch(batchId: Long, userIds: DataFrame): Unit = once(batchId) {
     require(log.committedCount > 0, "delete before any ingest")
     val old = oldHistograms(userIds).localCheckpoint(true)
     try {
@@ -141,10 +133,6 @@ final class CoocMaintenance(spark: SparkSession, root: String,
       org.apache.spark.sql.graftbridge.CheckpointBridge.release(old)
     }
   }
-
-  /** Force a compaction (two calls complete the physical erasure of
-    * negative-delta removals, like the tombstone members). */
-  def compactNow(): Unit = log.compactNow()
 
   /** The standing C matrix `(item, other, cnt)`, cnt > 0 — sum-merge of
     * the pairs fold; the exact relation `Cooccurrence.coocCounts`
@@ -165,4 +153,11 @@ final class CoocMaintenance(spark: SparkSession, root: String,
     * LLR + WindowGroupLimit rank). */
   def llrTopK(k: Int): DataFrame =
     Cooccurrence.llrTopKFromCounts(currentCounts(), k)
+}
+
+object CoocMaintenance {
+  private[streaming] val pairs = ShardLog.Relation("delta",
+    new ShardLog.SumFold(Seq("item", "other"), "cnt"), "pairs")
+  private[streaming] val users = ShardLog.Relation("delta",
+    new ShardLog.SumFold(Seq("user", "item"), "n"), "users")
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,12 +46,8 @@ import graft.operators.Dedup
  *    stamp so an empty-delta batch still reads under the explicit
  *    schema.
  *
- * Exactly-once under foreachBatch replay: Spark commits source offsets
- * AFTER foreachBatch returns, so a crash can leave batch b fully or
- * partially persisted here but uncommitted there. Replay of a COMMITTED
- * batch is a no-op (the marker short-circuits); replay of a crashed
- * batch rewrites fps/delta in overwrite mode and then commits — the
- * standard idempotent-foreachBatch protocol.
+ * Replay (the [[MaintainedIndex]] guard): a crashed batch rewrites
+ * fps/delta in overwrite mode and then commits.
  *
  * PRECONDITION — doc_ids are unique across ingest batches (each doc_id
  * is delivered by exactly one batch). refreshDelta detects changed
@@ -65,65 +60,18 @@ import graft.operators.Dedup
  * ids must dedup before processBatch.
  */
 final class IndexMaintenance(spark: SparkSession, root: String,
-    algo: IndexMaintenance.Algo, compactEvery: Int = 64) {
+    algo: IndexMaintenance.Algo, compactEvery: Int = 64)
+  extends MaintainedIndex(spark, root, compactEvery,
+    Seq(ShardLog.Relation("delta", IndexMaintenance.DeltaFold)), deleteKey = "node") {
 
   /** simhash maintenance (the common case). */
   def this(spark: SparkSession, root: String, maxHamming: Int) =
     this(spark, root, IndexMaintenance.Simhash(maxHamming))
 
-  private val log = new ShardLog(spark, root, compactEvery,
-    Seq(ShardLog.Relation("delta", IndexMaintenance.DeltaFold)), deleteKey = "node")
-
-  private def fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  // committed batch ids whose fps/<b> shard is part of the standing
-  // corpus scan — cached from one startup listing and advanced per commit
-  @volatile private var fpsIdsMemo: Vector[Long] = _
-  private def fpsIds: Vector[Long] = {
-    if (fpsIdsMemo == null) {
-      val fpsDir = new Path(s"$root/fps")
-      fpsIdsMemo =
-        if (!fs.exists(fpsDir)) Vector.empty
-        else fs.listStatus(fpsDir).toVector
-          .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-          // an fps dir without a committed marker is a crashed batch's
-          // debris — its replay overwrites it; never scan it as standing
-          .filter(log.isCommitted)
-          .sorted
-    }
-    fpsIdsMemo
-  }
-
-  /** Committed batch ids still individually listed — the post-snapshot
-    * TAIL. Ids <= [[coveredUpTo]] are committed but rolled into the
-    * snapshot marker; use [[isCommitted]]/[[committedCount]] for the full
-    * picture. */
-  def committedIds: Seq[Long] = log.committedIds
-
-  /** Max batch id summarized by the latest compacted snapshot. */
-  def coveredUpTo: Option[Long] = log.coveredUpTo
-
-  def isCommitted(id: Long): Boolean = log.isCommitted(id)
-
-  /** Total committed batches (covered prefix + tail). */
-  def committedCount: Long = log.committedCount
-
-  // committed DELETE-batch ids whose fpsdels/<b> mask shard is part of
-  // the standing-corpus anti-join — same caching discipline as fpsIds
-  @volatile private var fpsDelIdsMemo: Vector[Long] = _
-  private def fpsDelIds: Vector[Long] = {
-    if (fpsDelIdsMemo == null) {
-      val d = new Path(s"$root/fpsdels")
-      fpsDelIdsMemo =
-        if (!fs.exists(d)) Vector.empty
-        else fs.listStatus(d).toVector
-          .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-          .filter(log.isCommitted)
-          .sorted
-    }
-    fpsDelIdsMemo
-  }
+  // committed batches' fps/<b> stored columns — the standing corpus scan
+  private val fps = log.sideShards(s"$root/fps")
+  // committed delete batches' fpsdels/<b> masks over that scan
+  private val fpsDels = log.sideShards(s"$root/fpsdels")
 
   /**
    * DELETE documents from the index (takedown / right-to-erasure):
@@ -144,21 +92,15 @@ final class IndexMaintenance(spark: SparkSession, root: String,
    * deleted docs' 64-bit fingerprints stay on disk masked (not content;
    * physically erased at the next index rebuild).
    */
-  def deleteBatch(batchId: Long, docIds: DataFrame): Unit = {
-    if (log.isCommitted(batchId)) return
+  override def deleteBatch(batchId: Long, docIds: DataFrame): Unit = once(batchId) {
     val keys = docIds.select(col("doc_id").cast("long").as("node")).distinct()
     // the fps mask shard goes first — marker-last ordering makes the
     // crash replay overwrite both shards before committing
     keys.select(col("node").as("doc_id"))
-      .write.mode("overwrite").parquet(s"$root/fpsdels/$batchId")
-    log.commitDeletes(batchId, keys, """{"del":true}""")
-    if (fpsDelIdsMemo != null)
-      fpsDelIdsMemo = (fpsDelIdsMemo :+ batchId).distinct.sorted
+      .write.mode("overwrite").parquet(fpsDels.path(batchId))
+    super.deleteBatch(batchId, keys)
+    fpsDels.add(batchId)
   }
-
-  /** Eager compaction (cadence-independent); two calls physically purge
-    * every tombstoned `(node, comp)` row from the delta log. */
-  def compactNow(): Unit = log.compactNow()
 
   /** The standing `(node, comp)` index over all committed batches —
     * resolved from the cached commit state at plan time; safe to execute
@@ -173,19 +115,18 @@ final class IndexMaintenance(spark: SparkSession, root: String,
    * O(batch) writes + O(standing fps + index) scans + CC over the
    * touched subgraph — independent of HOW MANY batches preceded.
    */
-  def processBatch(batchId: Long, docs: DataFrame): Unit = {
-    if (log.isCommitted(batchId)) return
-    val standingFps = fpsIds
+  def processBatch(batchId: Long, docs: DataFrame): Unit = once(batchId) {
+    val standingFps = fps.ids
     // stage ONLY this batch's docs into the algo's stored columns and
     // persist them once — the lakehouse regime where fingerprints /
     // signatures are stored columns of the doc table
     graft.operators.Jobs.labeled(spark, s"idxmaint b=$batchId stage fps") {
       algo.stage(docs.select(col("doc_id"), col("text")))
-        .write.mode("overwrite").parquet(s"$root/fps/$batchId")
+        .write.mode("overwrite").parquet(fps.path(batchId))
     }
     // explicit schema: an EMPTY ingest file is a legal batch
     val newFps = spark.read.schema(algo.stagedSchema)
-      .parquet(s"$root/fps/$batchId")
+      .parquet(fps.path(batchId))
       .withColumn("inc", lit(true))
     // one multi-path scan over every standing shard (not a per-batch
     // union): scan cost tracks corpus volume, not batch count.
@@ -206,14 +147,14 @@ final class IndexMaintenance(spark: SparkSession, root: String,
       if (standingFps.isEmpty) None
       else {
         val raw = spark.read.schema(algo.stagedSchema)
-          .parquet(standingFps.map(b => s"$root/fps/$b"): _*)
+          .parquet(standingFps.map(fps.path): _*)
         // deleted docs are MASKED out of the standing corpus (fps shards
         // are immutable): key-only anti-join, broadcast-sized, applied
         // under the cache so every chunk scan sees the masked corpus
         val masked =
-          if (fpsDelIds.isEmpty) raw
+          if (fpsDels.ids.isEmpty) raw
           else raw.join(
-            spark.read.parquet(fpsDelIds.map(b => s"$root/fpsdels/$b"): _*),
+            spark.read.parquet(fpsDels.ids.map(fpsDels.path): _*),
             Seq("doc_id"), "left_anti")
         Some(masked.persist())
       }
@@ -239,7 +180,7 @@ final class IndexMaintenance(spark: SparkSession, root: String,
       standingRaw.foreach(_.unpersist())
       base.unpersist()
     }
-    if (fpsIdsMemo != null) fpsIdsMemo = (fpsIdsMemo :+ batchId).sorted
+    fps.add(batchId)
     // periodic delta-log compaction: every compactEvery committed
     // batches, fold the log into a snapshot so the per-batch index read
     // stays O(index + compactEvery deltas) forever. Compaction is an

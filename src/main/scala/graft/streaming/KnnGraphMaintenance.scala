@@ -37,73 +37,48 @@ import graft.operators.{IvfIndex, Similarity}
  * arrive as reverse edges).
  *
  * Durability: vectors ride an inner [[AnnMaintenance]] (its own shard
- * log under `root/vec`); edges ride a [[ShardLog]] under `root/graph`
- * with a top-k fold; probe shards are marker-gated like the dedup
- * maintenance's fps shards. Batch replay is idempotent end-to-end: the
+ * log under `root/vec`); edges ride this member's [[ShardLog]] under
+ * `root/graph` with a top-k fold; probe shards are side shards gated on
+ * the edge log's markers. Batch replay is idempotent end-to-end: the
  * vector commit short-circuits on its marker, the edge shard recomputes
  * deterministically from committed state (the reverse scan reads only
  * COMMITTED probe shards, so a crashed attempt's leftovers are
  * invisible), and the probe shard is overwritten before the edge
- * marker commits. SINGLE WRITER per root, as everywhere in the family.
+ * marker commits. A crash between the two logs' commits leaves the
+ * vector log one batch ahead; the replay completes the edge side.
  */
 final class KnnGraphMaintenance(spark: SparkSession, root: String,
     nLists: Int = 16, iters: Int = 3, k: Int = 5, nProbe: Int = 4,
-    compactEvery: Int = 64) {
+    compactEvery: Int = 64)
+  extends MaintainedIndex(spark, s"$root/graph", compactEvery,
+    Seq(ShardLog.Relation("edges", new KnnGraphMaintenance.TopKFold(k))),
+    deleteKey = "node", markerField = "probesFrom") {
 
   private val vec = new AnnMaintenance(spark, s"$root/vec", nLists, iters,
     compactEvery)
-  private val log = new ShardLog(spark, s"$root/graph", compactEvery,
-    Seq(ShardLog.Relation("edges", new KnnGraphMaintenance.TopKFold(k))),
-    // ordinary compactions must not lose the probe-generation watermark
-    () => s""""probesFrom":$probesFrom""", deleteKey = "node")
-
-  private def fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val ProbesFromField = """"probesFrom"\s*:\s*(\d+)""".r
 
   // probe shards older than this batch id reflect a SUPERSEDED centroid
   // geometry (an in-stream refit happened at that batch) and must never
-  // route reverse edges again — authoritative from the latest snapshot
-  // marker, the same crash discipline as the refit generation
-  @volatile private var probesFromMemo: Long = -1L
-  private def probesFrom: Long = {
-    if (probesFromMemo < 0)
-      probesFromMemo = log.latestSnapshotMarker
-        .flatMap(mk => ProbesFromField.findFirstMatchIn(mk).map(_.group(1).toLong))
-        .getOrElse(0L)
-    probesFromMemo
-  }
+  // route reverse edges again — the snapshot-marker watermark
+  private def probesFrom: Long = markerValue
 
-  // committed batch ids whose probes/<b> routing shard is standing —
-  // one startup listing gated on the edge log's markers AND the
-  // probe-generation watermark, advanced per commit (the
-  // IndexMaintenance.fpsIds discipline)
-  @volatile private var probeIdsMemo: Vector[Long] = _
-  private def probeIds: Vector[Long] = {
-    if (probeIdsMemo == null) {
-      val d = new Path(s"$root/probes")
-      probeIdsMemo =
-        if (!fs.exists(d)) Vector.empty
-        else fs.listStatus(d).toVector
-          .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-          .filter(log.isCommitted)
-          .sorted
-    }
-    probeIdsMemo.filter(_ >= probesFrom)
-  }
-
-  def committedIds: Seq[Long] = log.committedIds
-  def coveredUpTo: Option[Long] = log.coveredUpTo
-  def isCommitted(id: Long): Boolean = log.isCommitted(id)
-  def committedCount: Long = log.committedCount
+  // committed batches' probes/<b> routing shards
+  private val probes = log.sideShards(s"$root/probes")
+  // committed delete batches' dstdels/<b> masks — edges INTO a deleted
+  // vector are masked at read (they are baked into earlier
+  // shards/snapshots, so unlike the node-side tombstones they cannot be
+  // purged by a compaction; a refit erases them physically)
+  private val dstDels = log.sideShards(s"$root/dstdels")
 
   /** Fold one ingest batch of `(vec_id, embedding)` into the vector
     * index AND the standing kNN graph. Idempotent; O(batch · probed
     * lists) after the bootstrap. */
   def processBatch(batchId: Long, embs: DataFrame): Unit = {
     vec.processBatch(batchId, embs)
-    if (log.isCommitted(batchId)) return
+    once(batchId)(processEdges(batchId, embs))
+  }
+
+  private def processEdges(batchId: Long, embs: DataFrame): Unit = {
     val cents = vec.centroids()
     val batchAssigned = IvfIndex.assignBatch(embs, cents)
       .localCheckpoint(true) // reused by fwd, rev, and the probe shard
@@ -115,16 +90,15 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
         .select(col("query_id").as("node"), col("vec_id").as("dst"), col("cos"))
       // reverse: new vectors offered to every standing node probing
       // their cluster, per-node top-k OF THE BATCH (lossless — class doc)
-      val standing = probeIds
+      val standing = probes.ids.filter(_ >= probesFrom)
       val rev =
         if (standing.isEmpty) None
         else {
-          val probesRaw = spark.read.parquet(
-            standing.map(b => s"$root/probes/$b"): _*)
+          val probesRaw = spark.read.parquet(standing.map(probes.path): _*)
           // deleted nodes leave the ROUTING too — without this, stale
           // probe rows would regenerate adjacency for a node whose
           // protocol tombstone was already purged by a compaction
-          val probes = deletedKeys("node")
+          val routing = deletedKeys("node")
             .map(d => probesRaw.join(d, Seq("node"), "left_anti"))
             .getOrElse(probesRaw)
           val newSide = batchAssigned.select(col("cluster"),
@@ -132,7 +106,7 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
             col("norm").as("dnorm"))
           val w = Window.partitionBy(col("node"))
             .orderBy(col("cos").desc, col("dst"))
-          Some(probes.join(newSide, Seq("cluster"))
+          Some(routing.join(newSide, Seq("cluster"))
             .where(col("node") =!= col("dst"))
             .select(col("node"), col("dst"),
               round(Similarity.cosineFromParts(
@@ -147,31 +121,13 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
       // reverse scan above read only COMMITTED shards, so a replay after
       // a crash here recomputes the identical edge shard
       IvfIndex.probePairs(cents, batchAssigned, nProbe)
-        .write.mode("overwrite").parquet(s"$root/probes/$batchId")
+        .write.mode("overwrite").parquet(probes.path(batchId))
       log.commitShard(batchId, Seq(shard),
         s"""{"k":$k,"nProbe":$nProbe,"nLists":$nLists}""")
-      probeIdsMemo = (probeIds :+ batchId).distinct.sorted
+      probes.add(batchId)
     } finally {
       org.apache.spark.sql.graftbridge.CheckpointBridge.release(batchAssigned)
     }
-  }
-
-  // committed batch ids whose dstdels/<b> mask shard is standing —
-  // edges INTO a deleted vector are masked at read (they are baked into
-  // earlier shards/snapshots, so unlike the node-side tombstones they
-  // cannot be purged by a compaction; a refit erases them physically)
-  @volatile private var dstDelIdsMemo: Vector[Long] = _
-  private def dstDelIds: Vector[Long] = {
-    if (dstDelIdsMemo == null) {
-      val d = new Path(s"$root/dstdels")
-      dstDelIdsMemo =
-        if (!fs.exists(d)) Vector.empty
-        else fs.listStatus(d).toVector
-          .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-          .filter(log.isCommitted)
-          .sorted
-    }
-    dstDelIdsMemo.filter(_ >= probesFrom)
   }
 
   /**
@@ -196,15 +152,15 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
    * mask (the `probesFrom` watermark gates `dstdels` exactly like the
    * probe shards).
    */
-  def deleteBatch(batchId: Long, ids: DataFrame): Unit = {
+  override def deleteBatch(batchId: Long, ids: DataFrame): Unit = {
     vec.deleteBatch(batchId, ids)
-    if (log.isCommitted(batchId)) return
-    val keys = ids.select(col("vec_id").cast("long").as("node")).distinct()
-    keys.select(col("node").as("dst"))
-      .write.mode("overwrite").parquet(s"$root/dstdels/$batchId")
-    log.commitDeletes(batchId, keys, """{"del":true}""")
-    if (dstDelIdsMemo != null)
-      dstDelIdsMemo = (dstDelIdsMemo :+ batchId).distinct.sorted
+    once(batchId) {
+      val keys = ids.select(col("vec_id").cast("long").as("node")).distinct()
+      keys.select(col("node").as("dst"))
+        .write.mode("overwrite").parquet(dstDels.path(batchId))
+      super.deleteBatch(batchId, keys)
+      dstDels.add(batchId)
+    }
   }
 
   /**
@@ -226,7 +182,10 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
       .map(d => corpus.join(d, Seq("vec_id"), "left_anti"))
       .getOrElse(corpus)
     vec.refitBatch(batchId, clean) // idempotent: marker short-circuits
-    if (log.isCommitted(batchId)) return
+    once(batchId)(refitEdges(batchId))
+  }
+
+  private def refitEdges(batchId: Long): Unit = {
     val cents = vec.centroids()
     val index = vec.currentIndex()
     val full = IvfIndex.knnJoinFrom(cents, index, lit(true), k, nProbe,
@@ -235,33 +194,25 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
     // new-geometry routing table first (replay overwrites), then the
     // atomic snapshot commit carrying the watermark
     IvfIndex.probePairs(cents, index, nProbe)
-      .write.mode("overwrite").parquet(s"$root/probes/$batchId")
+      .write.mode("overwrite").parquet(probes.path(batchId))
     log.commitSnapshot(batchId, full, s""""probesFrom":$batchId""")
-    probesFromMemo = batchId
+    advanceMarker(batchId)
     // superseded-geometry shards: unreachable (the watermark gates every
     // read), swept eagerly; a crash mid-sweep just leaves files the
-    // filter already ignores
-    if (probeIdsMemo != null)
-      probeIdsMemo.filter(_ < batchId).foreach { b =>
-        fs.delete(new Path(s"$root/probes/$b"), true)
-      }
-    probeIdsMemo = Vector(batchId)
-    // the delete masks are baked into the refit (deleted vectors are
-    // not in the rebuilt corpus) — retire their shards with the same
-    // watermark discipline
-    if (dstDelIdsMemo != null)
-      dstDelIdsMemo.filter(_ < batchId).foreach { b =>
-        fs.delete(new Path(s"$root/dstdels/$b"), true)
-      }
-    dstDelIdsMemo = Vector.empty
+    // filter already ignores. The delete masks are baked into the refit
+    // (deleted vectors are not in the rebuilt corpus) — retired the same
+    // way.
+    probes.add(batchId)
+    probes.retire(_ < batchId).foreach(b => fs.delete(new Path(probes.path(b)), true))
+    dstDels.retire(_ < batchId).foreach(b => fs.delete(new Path(dstDels.path(b)), true))
   }
 
   /** The persistent deleted-key set under `alias`, when any deletes are
     * live (KB-scale; retired wholesale by the next refit's watermark). */
   private def deletedKeys(alias: String): Option[DataFrame] = {
-    val ids = dstDelIds
+    val ids = dstDels.ids.filter(_ >= probesFrom)
     if (ids.isEmpty) None
-    else Some(spark.read.parquet(ids.map(b => s"$root/dstdels/$b"): _*)
+    else Some(spark.read.parquet(ids.map(dstDels.path): _*)
       .select(col("dst").as(alias)).distinct())
   }
 
@@ -285,6 +236,11 @@ final class KnnGraphMaintenance(spark: SparkSession, root: String,
       .withColumn("rnk", row_number().over(w).cast("long"))
       .select(col("node"), col("rnk"), col("dst"), col("cos"))
   }
+
+  /** Eager compaction of both logs; two calls purge every deleted
+    * vector's row and adjacency (edges INTO it stay masked until a
+    * refit). */
+  override def compactNow(): Unit = { vec.compactNow(); super.compactNow() }
 
   /** The maintained vector index under the graph (for serves/refits). */
   def vectorIndex(): DataFrame = vec.currentIndex()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{functions, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -64,30 +64,18 @@ import graft.operators.Retrieval
  * periodic maintenance the index needs.
  */
 final class LexicalIndexMaintenance(spark: SparkSession, root: String,
-    compactEvery: Int = 64, positions: Boolean = false) {
+    compactEvery: Int = 64, positions: Boolean = false)
+  extends MaintainedIndex(spark, root, compactEvery,
+    Seq(LexicalIndexMaintenance.postings, LexicalIndexMaintenance.doclens) ++
+      (if (positions) Seq(LexicalIndexMaintenance.poslog) else Nil), deleteKey = "doc_id") {
 
-  private val postings = ShardLog.Relation("seg",
-    new ShardLog.AppendFold(Seq("doc_id", "term", "tf", "dl")), "postings")
-  private val doclens = ShardLog.Relation("seg",
-    new ShardLog.AppendFold(Seq("doc_id", "dl")), "doclens")
-  // positional segments (opt-in — they are dl-sized per doc, not
-  // distinct-term-sized): what phrase queries read, term-pruned
-  private val poslog = ShardLog.Relation("seg",
-    new ShardLog.AppendFold(Seq("doc_id", "term", "pos")), "positions")
-  private val segments = new ShardLog(spark, root, compactEvery,
-    Seq(postings, doclens) ++ (if (positions) Seq(poslog) else Nil), deleteKey = "doc_id")
-
-  def committedIds: Seq[Long] = segments.committedIds
-  def coveredUpTo: Option[Long] = segments.coveredUpTo
-  def isCommitted(id: Long): Boolean = segments.isCommitted(id)
-  def committedCount: Long = segments.committedCount
+  import LexicalIndexMaintenance.{doclens, poslog, postings}
 
   /** Fold one ingest batch of `(doc_id, text)` into the standing index.
     * Idempotent; O(batch) — one tokenize of the batch, one segment
     * write per relation, nothing scans the standing state except
     * compaction. */
-  def processBatch(batchId: Long, docs: DataFrame): Unit = {
-    if (segments.isCommitted(batchId)) return
+  def processBatch(batchId: Long, docs: DataFrame): Unit = once(batchId) {
     val toks = docs
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -96,7 +84,7 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
       val tf = toks
         .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-      segments.commitShard(batchId, Seq(
+      log.commitShard(batchId, Seq(
         tf.join(dl, "doc_id").select(col("doc_id"), col("term"), col("tf"), col("dl")), dl) ++
         (if (positions) Seq(toks) else Nil), "{}")
     } finally {
@@ -108,19 +96,18 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
   /** DELETE standing docs by id (takedown / right-to-erasure): one
     * tombstone batch masks every relation. Scores reflect the erasure
     * exactly — df, N and avgdl are all derived from the live folds. */
-  def deleteBatch(batchId: Long, ids: DataFrame): Unit = {
-    segments.commitDeletes(batchId, ids.select(col("doc_id").cast("long").as("doc_id")),
-      """{"del":true}""")
+  override def deleteBatch(batchId: Long, ids: DataFrame): Unit = {
+    super.deleteBatch(batchId, ids.select(col("doc_id").cast("long").as("doc_id")))
     invalidateStats()
   }
 
   /** The standing postings relation (doc_id, term, tf, dl) — snapshot +
     * tail, tombstones applied; resolved from the cached commit state at
     * plan time (serve-while-compact, per [[ShardLog]]). */
-  def currentPostings(): DataFrame = segments.currentRows(postings)
+  def currentPostings(): DataFrame = log.currentRows(postings)
 
   /** The standing doc-length relation (doc_id, dl). */
-  def currentDoclens(): DataFrame = segments.currentRows(doclens)
+  def currentDoclens(): DataFrame = log.currentRows(doclens)
 
   // the corpus stats are ONE doc-cardinality aggregate (two slim
   // columns, map-side partial) — memoized per commit state so a serve
@@ -158,7 +145,7 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
     * root built with `positions = true`. */
   def currentPositions(): DataFrame = {
     require(positions, "this index was built without positional segments")
-    segments.currentRows(poslog)
+    log.currentRows(poslog)
   }
 
   /** EXACT PHRASE SEARCH from the standing positional segments: reads
@@ -230,7 +217,7 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
     val sel = q.join(broadcast(dfT), "term")
       .crossJoin(broadcast(statsDf()))
       .withColumn("w", round(col("qtf") *
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0), 6))
+        functions.log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0), 6))
       .withColumn("trnk",
         row_number().over(Window.orderBy(col("w").desc, col("term"))))
       .where(col("trnk") <= maxTerms)
@@ -244,4 +231,15 @@ final class LexicalIndexMaintenance(spark: SparkSession, root: String,
       .where(col("rnk") <= k)
       .select(col("rnk").cast("long").as("rnk"), col("doc_id"), col("bm25"))
   }
+}
+
+object LexicalIndexMaintenance {
+  private[streaming] val postings = ShardLog.Relation("seg",
+    new ShardLog.AppendFold(Seq("doc_id", "term", "tf", "dl")), "postings")
+  private[streaming] val doclens = ShardLog.Relation("seg",
+    new ShardLog.AppendFold(Seq("doc_id", "dl")), "doclens")
+  // positional segments (opt-in — they are dl-sized per doc, not
+  // distinct-term-sized): what phrase queries read, term-pruned
+  private[streaming] val poslog = ShardLog.Relation("seg",
+    new ShardLog.AppendFold(Seq("doc_id", "term", "pos")), "positions")
 }

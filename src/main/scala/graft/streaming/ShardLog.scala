@@ -66,7 +66,7 @@ import org.apache.spark.sql.functions.col
  */
 private[streaming] final class ShardLog(spark: SparkSession, root: String,
     compactEvery: Int, relations: Seq[ShardLog.Relation],
-    markerExtra: () => String = () => "", deleteKey: String = "") {
+    markerExtra: () => String, deleteKey: String) {
 
   require(compactEvery >= 2, s"compactEvery must be >= 2, got $compactEvery")
 
@@ -77,28 +77,11 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
   private def dataDir(rel: ShardLog.Relation) = s"$root/${rel.dataPath}"
   private def baseDir(rel: ShardLog.Relation) = s"$root/${rel.basePath}"
 
-  // committed DELETE-batch ids whose dels/<b> key shard is still live —
-  // cached from one startup listing (unmarked crash debris filtered out
-  // via isCommitted), advanced per commitDeletes, pruned at the deferred
-  // sweep. Bounded: tombstones fold into the snapshot at compaction and
-  // their shards are swept one cycle later, so at most ~2*compactEvery
-  // ids are ever live.
-  @volatile private var delIdsMemo: Vector[Long] = _
-  private def delIds: Vector[Long] = {
-    if (delIdsMemo == null) {
-      delIdsMemo =
-        if (!fs.exists(delsDir)) Vector.empty
-        else fs.listStatus(delsDir).toVector
-          .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
-          .filter(state.isCommitted)
-          .sorted
-    }
-    delIdsMemo
-  }
-
-  /** Committed delete-batch ids whose tombstone shard is still on disk
-    * (for specs/forensics; reads already fold them in). */
-  def committedDeleteIds: Seq[Long] = delIds
+  // committed DELETE-batch ids whose dels/<b> key shard is still live,
+  // pruned at the deferred sweep. Bounded: tombstones fold into the
+  // snapshot at compaction and their shards are swept one cycle later,
+  // so at most ~2*compactEvery ids are ever live.
+  private val dels = sideShards(delsDir.toString)
 
   // cached rolled-up commit state (single-writer contract — see class doc)
   @volatile private var logState: CommitMarkers.LogState = _
@@ -122,8 +105,8 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
 
   /** The latest snapshot marker's JSON content (carries `upTo`, `count`,
     * plus any extra fields the owner recorded — e.g. a model generation
-    * for the streaming-refit members). One small FS read per call; the
-    * owners memoize what they parse out of it. */
+    * for the streaming-refit members). One small FS read per call;
+    * [[MaintainedIndex]] memoizes what it parses out of it. */
   def latestSnapshotMarker: Option[String] =
     state.coveredUpTo.map(b => CommitMarkers.readMarker(spark, baseMetaDir, b))
 
@@ -181,9 +164,9 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     require(deleteKey.nonEmpty, "this log was built without a deleteKey")
     if (isCommitted(batchId)) return
     keys.select(col(deleteKey)).distinct()
-      .write.mode("overwrite").parquet(new Path(delsDir, batchId.toString).toString)
+      .write.mode("overwrite").parquet(dels.path(batchId))
     commitWrittenShard(batchId, markerJson)
-    delIdsMemo = (delIds :+ batchId).distinct.sorted
+    dels.add(batchId)
     compactIfDue()
   }
 
@@ -258,19 +241,19 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     * pull a file out from under a live plan. */
   private def liveDels: Vector[Long] = {
     val cov = state.coveredUpTo
-    delIds.filter(id => cov.forall(id > _))
+    dels.ids.filter(id => cov.forall(id > _))
   }
 
   private def rowsFrom(rel: ShardLog.Relation, snapshot: Option[Long],
       tail: Seq[Long]): DataFrame = {
     // delete batches have no relation shards — their ids leave the fold
-    val dels = liveDels
-    val dataTail = if (dels.isEmpty) tail else tail.filterNot(dels.contains)
+    val live = liveDels
+    val dataTail = if (live.isEmpty) tail else tail.filterNot(live.contains)
     val folded =
       if (snapshot.isEmpty && dataTail.isEmpty) rel.fold.empty(spark)
       else rel.fold.rows(spark, snapshot.map(b => s"${baseDir(rel)}/$b"),
         dataTail.map(b => b -> s"${dataDir(rel)}/$b"))
-    antiTombstones(folded, dels)
+    antiTombstones(folded, live)
   }
 
   /** Fold minus committed tombstones: one multi-path scan of the key-only
@@ -280,10 +263,10 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     * tombstone volume degrades to a shuffled anti-join, which is still
     * the right plan. No committed deletes → the fold is returned as-is
     * (zero plan overhead for delete-free logs). */
-  private def antiTombstones(rows: DataFrame, dels: Seq[Long]): DataFrame =
-    if (dels.isEmpty) rows
+  private def antiTombstones(rows: DataFrame, ids: Seq[Long]): DataFrame =
+    if (ids.isEmpty) rows
     else rows.join(
-      spark.read.parquet(dels.map(b => new Path(delsDir, b.toString).toString): _*),
+      spark.read.parquet(ids.map(dels.path): _*),
       Seq(deleteKey), "left_anti")
 
   /** Delete numeric entries under `dir` whose id satisfies `drop` (never
@@ -324,7 +307,7 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
       // there) AND into base/upTo — the key shards have nothing left to
       // mask; this sweep completes the physical purge
       sweep(delsDir, recursive = true)(_ <= p)
-      delIdsMemo = delIds.filter(_ > p)
+      dels.retire(_ <= p)
       sweep(baseMetaDir, recursive = false)(_ < p)
       relations.foreach(rel => sweep(new Path(baseDir(rel)), recursive = true)(_ < p))
     }
@@ -358,6 +341,39 @@ private[streaming] final class ShardLog(spark: SparkSession, root: String,
     * execute concurrently with ONE later compaction (see class doc). */
   def currentRows(rel: ShardLog.Relation = relations.head): DataFrame =
     rowsFrom(rel, state.coveredUpTo, state.tail)
+
+  /** The committed side shards under `dir` — one parquet shard per batch
+    * id, written before its batch's marker and gated on it (the
+    * tombstone keys here; a member's stored columns or masks beside its
+    * relations). */
+  def sideShards(dir: String): SideShards = new SideShards(dir)
+
+  /** Side-shard ids, listed once (shards without a committed marker are
+    * a crashed batch's debris — never read, overwritten by the replay),
+    * then advanced per commit and retired per sweep. */
+  final class SideShards private[ShardLog] (dir: String) {
+    @volatile private var memo: Vector[Long] = _
+
+    /** Committed ids with a shard under `dir`, ascending. */
+    def ids: Vector[Long] = {
+      if (memo == null)
+        memo = CommitMarkers.committed(spark, new Path(dir)).filter(isCommitted).toVector
+      memo
+    }
+
+    def path(id: Long): String = s"$dir/$id"
+
+    /** Record `id`, whose marker just committed. */
+    def add(id: Long): Unit = if (memo != null) memo = (memo :+ id).distinct.sorted
+
+    /** Forget the committed ids `drop` selects and return them; the
+      * caller removes their shards. */
+    def retire(drop: Long => Boolean): Vector[Long] = {
+      val (gone, kept) = ids.partition(drop)
+      memo = kept
+      gone
+    }
+  }
 }
 
 private[streaming] object ShardLog {

@@ -107,6 +107,9 @@ class CoocMaintSpec extends AnyFunSuite with BeforeAndAfterAll {
     m.compactNow(); m.compactNow()
     assert(counts(m.currentCounts()) == counts(Cooccurrence.coocCounts(kept)))
     assert(m.currentHistograms().where(delPred).count() == 0)
+    val erased = delUsers.collect().map(_.get(0).asInstanceOf[Number].longValue).toSet
+    assert(DiskRows.keysUnder(spark, root, Seq("users"), "user").intersect(erased).isEmpty,
+      "no parquet file under users/ may still hold a deleted user")
   }
 
   test("crash before the batch marker (every relation shard written, " +

@@ -105,7 +105,17 @@ class LexicalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getLong(0)).toSet.intersect(del).isEmpty)
     assert(m.currentDoclens().select("doc_id").collect()
       .map(_.getLong(0)).toSet.intersect(del).isEmpty)
+    m.compactNow(); m.compactNow()
+    assertErasedOnDisk(root, Seq("postings", "doclens"), del)
   }
+
+  /** No parquet file under the relations `rels` still holds an erased
+    * doc_id — read straight off disk, bypassing the folds. */
+  private def assertErasedOnDisk(root: String, rels: Seq[String], del: Set[Long]): Unit =
+    rels.foreach { rel =>
+      assert(DiskRows.keysUnder(spark, root, Seq(rel), "doc_id").intersect(del).isEmpty,
+        s"a parquet file under $rel/ still holds an erased doc_id")
+    }
 
   test("positional segments: standing phrase search equals the batch " +
       "scan, survives deletes, and fails fast without positions") {
@@ -137,6 +147,8 @@ class LexicalIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val delId = full.head._2
     m.deleteBatch(3L, spark.createDataFrame(Seq(Tuple1(delId))).toDF("doc_id"))
     assert(standing() == batchMatches(docs.where(col("doc_id") =!= delId)))
+    m.compactNow(); m.compactNow()
+    assertErasedOnDisk(root, Seq("postings", "doclens", "positions"), Set(delId))
 
     // a root built WITHOUT positions refuses phrase serves loudly
     val noPos = new LexicalIndexMaintenance(spark,

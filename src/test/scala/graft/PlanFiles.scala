@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * bench's sf0.1 values differ only in stats). Drain-style queries whose
   * cost is in per-batch actions rather than one plan still get their
   * final serve plan dumped — the action-count evidence lives in
-  * OPTIMIZATION_r16.md / JobProfile output instead. */
+  * OPTIMIZATION_r16.md and the perfbench trace instead. */
 object PlanFiles {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanFiles <plansSubdir> <suffix> <q>...")

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.streaming.{CoocMaintenance, LexicalIndexMaintenance}
+import graft.streaming.{AnnMaintenance, CoocMaintenance, IndexMaintenance, IvfPqMaintenance,
+  KnnGraphMaintenance, LexicalIndexMaintenance, SqMaintenance}
 
 /**
  * Test-only fault injection: the local file system under the `crashfs`
@@ -63,14 +64,16 @@ object CrashFs {
 }
 
 /**
- * CRASH-POINT ENUMERATION for the two multi-relation maintainers: for
- * every mutating file-system call N of a batch that ingests AND compacts,
- * and of a delete batch, the batch dies at call N and a fresh instance
- * resumes on the same root. Before the replay the fresh instance serves
- * exactly the clean drain of b-1 or of b batches (never a mix) and
- * reports `isCommitted(b)` accordingly; no commit marker exists without
- * every relation shard it names; after the replay the serve equals the
- * clean drain of b batches exactly.
+ * CRASH-POINT ENUMERATION for every ShardLog maintainer: for every
+ * mutating file-system call N of each target batch (an ingest that
+ * compacts, a delete, an in-stream refit), the batch dies at call N and a
+ * fresh instance resumes on the same root. Before the replay the fresh
+ * instance serves exactly the clean drain up to b-1 or up to b (never a
+ * mix) and reports `isCommitted(b)` accordingly; no commit marker exists
+ * without every relation shard it names; after the replay the serve
+ * equals the clean drain up to b exactly. The model members serve their
+ * generation and loaded model next to the standing table, so a crash that
+ * pairs a table with the wrong model fails the check.
  */
 class ShardLogCrashSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -104,13 +107,17 @@ class ShardLogCrashSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
+  /** One shard log under the member's root: its directory (relative to
+    * the root, "" for the root itself) and its relations' shard and
+    * snapshot directories (relative to the log). */
+  private case class Log(dir: String, dataDirs: Seq[String], baseDirs: Seq[String])
+
   /**
    * Drain `batches` batches cleanly, then enumerate every crash point of
-   * each batch in `targets`. `dataDirs`/`baseDirs` are the relations'
-   * shard and snapshot directories relative to the root.
+   * each batch in `targets`; `logs` are the member's shard logs.
    */
   private def enumerate(name: String, batches: Int, targets: Seq[Int],
-      dataDirs: Seq[String], baseDirs: Seq[String])(open: String => Member): Unit = {
+      logs: Seq[Log])(open: String => Member): Unit = {
     CrashFs.arm(0)
     val scratch = Files.createTempDirectory(s"crash_$name").toFile
     def uri(dir: File) = s"${CrashFs.Scheme}://${dir.getAbsolutePath}"
@@ -144,7 +151,7 @@ class ShardLogCrashSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"$at: the fresh instance serves neither $b nor ${b + 1} drained batches")
         assert(got == (if (committed) drained(b) else drained(b - 1)),
           s"$at: isCommitted($b) = $committed disagrees with what is served")
-        assertMarkersComplete(root, dataDirs, baseDirs, at)
+        logs.foreach(l => assertMarkersComplete(new File(root, l.dir), l.dataDirs, l.baseDirs, at))
         // a committed batch's replay short-circuits: what it serves was
         // checked above
         resumed.run(b)
@@ -187,7 +194,7 @@ class ShardLogCrashSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until 6).flatMap(u => Seq((u, (u + b) % 7), (u, (u * 3 + b) % 7)))
     }
     enumerate("cooc", Batches, Targets,
-      Seq("pairs/delta", "users/delta"), Seq("pairs/base", "users/base")) { root =>
+      Seq(Log("", Seq("pairs/delta", "users/delta"), Seq("pairs/base", "users/base")))) { root =>
       val m = new CoocMaintenance(spark, root, compactEvery = 2)
       new Member {
         def run(b: Int): Unit =
@@ -211,14 +218,136 @@ class ShardLogCrashSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val terms = Seq("table", "scan", "key")
     enumerate("lex", Batches, Targets,
-      Seq("postings/seg", "doclens/seg", "positions/seg"),
-      Seq("postings/base", "doclens/base", "positions/base")) { root =>
+      Seq(Log("", Seq("postings/seg", "doclens/seg", "positions/seg"),
+        Seq("postings/base", "doclens/base", "positions/base")))) { root =>
       val m = new LexicalIndexMaintenance(spark, root, compactEvery = 2, positions = true)
       new Member {
         def run(b: Int): Unit =
           if (b < 4) m.processBatch(b, docs(b).toDF("doc_id", "text"))
           else m.deleteBatch(b, Seq(1L, 7L).toDF("doc_id"))
         def serve(): Seq[String] = rows(m.bm25(terms)) ++ rows(m.currentPositions())
+        def isCommitted(b: Long): Boolean = m.isCommitted(b)
+      }
+    }
+  }
+
+  /** 36 deterministic 8-dim vectors in four loose blobs. */
+  private def vectors: DataFrame = {
+    val rows = (0L until 36L).map { i =>
+      val blob = (i % 4).toInt
+      val v = Array.fill(8)(0.05f)
+      v(blob) = (1.0 + 0.002 * i).toFloat
+      v(blob + 4) = (0.5 + 0.003 * i).toFloat
+      (i, v.toSeq)
+    }
+    spark.createDataFrame(rows).toDF("vec_id", "embedding")
+  }
+
+  private def vecBatch(b: Int, of: Int): DataFrame =
+    vectors.where(org.apache.spark.sql.functions.col("vec_id") % of === b)
+
+  private def vecsUpTo(b: Int, of: Int): DataFrame =
+    vectors.where(org.apache.spark.sql.functions.col("vec_id") % of <= b)
+
+  private def matrix(a: Array[Array[Double]]): Seq[String] = a.map(_.mkString(",")).toSeq
+
+  // the model members, compactEvery = 2: batch 0 bootstraps the model,
+  // batch 1 compacts, batch 3 is an in-stream refit (a generation-1
+  // snapshot), batch 5 ingests and compacts, carrying the generation
+  // forward in its snapshot marker
+  private val ModelBatches = 6
+  private val ModelTargets = Seq(3, 5)
+
+  /** Batch b of a model member: a refit over every vector of batches
+    * 0..3 at b = 3, else an ingest of `vec_id % 6 == b`. */
+  private def modelRun(b: Int)(ingest: (Long, DataFrame) => Unit,
+      refit: (Long, DataFrame) => Unit): Unit =
+    if (b == 3) refit(b, vecsUpTo(3, ModelBatches)) else ingest(b, vecBatch(b, ModelBatches))
+
+  test("AnnMaintenance: every crash point of a refit batch and of an " +
+      "ingest+compact batch resumes to a clean drain") {
+    enumerate("ann", ModelBatches, ModelTargets,
+      Seq(Log("", Seq("assign"), Seq("base")))) { root =>
+      val m = new AnnMaintenance(spark, root, nLists = 2, iters = 2, compactEvery = 2)
+      new Member {
+        def run(b: Int): Unit = modelRun(b)(m.processBatch, m.refitBatch)
+        def serve(): Seq[String] =
+          rows(m.currentIndex()) ++ Seq(s"gen ${m.generation}") ++ matrix(m.centroids())
+        def isCommitted(b: Long): Boolean = m.isCommitted(b)
+      }
+    }
+  }
+
+  test("SqMaintenance: every crash point of a refit batch and of an " +
+      "ingest+compact batch resumes to a clean drain") {
+    enumerate("sq", ModelBatches, ModelTargets,
+      Seq(Log("", Seq("codes"), Seq("base")))) { root =>
+      val m = new SqMaintenance(spark, root, dims = 8, compactEvery = 2)
+      new Member {
+        def run(b: Int): Unit = modelRun(b)(m.processBatch, m.refitBatch)
+        def serve(): Seq[String] = rows(m.currentCodes()) ++ Seq(s"gen ${m.generation}",
+          m.stats().mins.mkString(","), m.stats().maxs.mkString(","))
+        def isCommitted(b: Long): Boolean = m.isCommitted(b)
+      }
+    }
+  }
+
+  test("IvfPqMaintenance: every crash point of a refit batch and of an " +
+      "ingest+compact batch resumes to a clean drain") {
+    enumerate("ivfpq", ModelBatches, ModelTargets,
+      Seq(Log("", Seq("codes"), Seq("base")))) { root =>
+      val m = new IvfPqMaintenance(spark, root, nLists = 2, iters = 2, m = 2, ksub = 4,
+        pqIters = 2, compactEvery = 2, dims = 8)
+      new Member {
+        def run(b: Int): Unit = modelRun(b)(m.processBatch, m.refitBatch)
+        def serve(): Seq[String] = {
+          val (cents, books) = m.models()
+          rows(m.currentTable()) ++ Seq(s"gen ${m.generation}") ++ matrix(cents) ++
+            books.toSeq.flatMap(matrix)
+        }
+        def isCommitted(b: Long): Boolean = m.isCommitted(b)
+      }
+    }
+  }
+
+  test("IndexMaintenance: every crash point of an ingest+compact batch " +
+      "and of a delete batch resumes to a clean drain") {
+    val session = spark; import session.implicits._
+    val words = Vector("lake", "house", "table", "scan", "merge", "row", "key", "value")
+    // doc_ids equal mod 5 carry the same text, so components span batches
+    val docs = (0 until 4).map { b =>
+      (0 until 4).map { i =>
+        val id = b * 4 + i
+        (id.toLong, (0 until 12).map(j => words((id % 5 + j * 3) % words.size)).mkString(" "))
+      }
+    }
+    enumerate("index", Batches, Targets, Seq(Log("", Seq("delta"), Seq("base")))) { root =>
+      val m = new IndexMaintenance(spark, root, IndexMaintenance.Simhash(3), compactEvery = 2)
+      new Member {
+        def run(b: Int): Unit =
+          if (b < 4) m.processBatch(b, docs(b).toDF("doc_id", "text"))
+          else m.deleteBatch(b, Seq(1L, 6L, 12L).toDF("doc_id"))
+        def serve(): Seq[String] = rows(m.currentIndex())
+        def isCommitted(b: Long): Boolean = m.isCommitted(b)
+      }
+    }
+  }
+
+  test("KnnGraphMaintenance: every crash point of an ingest+compact, a " +
+      "delete and a refit batch resumes to a clean drain in both logs") {
+    val session = spark; import session.implicits._
+    // batches 0-3 ingest vec_id % 4 (3 compacts both logs), 4 deletes,
+    // 5 refits over the surviving corpus
+    enumerate("knn", 6, Seq(3, 4, 5), Seq(Log("vec", Seq("assign"), Seq("base")),
+        Log("graph", Seq("edges"), Seq("base")))) { root =>
+      val m = new KnnGraphMaintenance(spark, root, nLists = 2, iters = 2, k = 3,
+        nProbe = 1, compactEvery = 2)
+      new Member {
+        def run(b: Int): Unit =
+          if (b < 4) m.processBatch(b, vecBatch(b, 4))
+          else if (b == 4) m.deleteBatch(b, Seq(2L, 13L).toDF("vec_id"))
+          else m.refitBatch(b, vectors)
+        def serve(): Seq[String] = rows(m.currentGraph())
         def isCommitted(b: Long): Boolean = m.isCommitted(b)
       }
     }

@@ -119,17 +119,7 @@ class ShardLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     m.compactNow(); m.compactNow()
     assert(!delsDir.exists() || delsDir.listFiles().isEmpty,
       "after two compactions the tombstone shards are gone")
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-    val rowParquet = try {
-      walk.filter { p =>
-        val s = p.toString
-        s.endsWith(".parquet") &&
-          (s.contains("/assign/") || s.contains("/base/") || s.contains("/dels/"))
-      }.toArray.map(_.toString)
-    } finally walk.close()
-    assert(rowParquet.nonEmpty)
-    val survivors = spark.read.parquet(rowParquet: _*)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
+    val survivors = DiskRows.keysUnder(spark, root, Seq("assign", "base", "dels"), "vec_id")
     assert(survivors.intersect(delSet).isEmpty,
       "no parquet file under the root may still hold a deleted vec_id")
   }
