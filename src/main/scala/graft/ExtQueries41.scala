@@ -89,31 +89,16 @@ object ExtQueries41 {
     }),
 
     "stream_dsv2_topk" -> ((s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-      val staged = ExtQueries40.stagedCsv(s, dir)
-      val st = new graft.streaming.StreamingCooc.State(s)
       // The cooc delta pipeline is trigger-split independent (processBatch
       // folds deltas associatively), so batching the aligned staged files
       // 3-per-trigger amortizes per-trigger planning without changing the
       // drained result — same oracle. Strict per-file admission (the
       // reference monitor default, maxFilesPerTrigger=1) stays covered by
       // stream_dsv2_interactions/stream_dsv2_pruned and the source spec.
-      val q = s.readStream.format("graft-interactions")
-        .option("maxFilesPerTrigger", 3).load(staged)
+      val interactions = s.readStream.format("graft-interactions")
+        .option("maxFilesPerTrigger", 3).load(ExtQueries40.stagedCsv(s, dir))
         .select(col("user"), col("item"), unix_millis(col("ts")).as("ts"))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          graft.streaming.StreamingCooc.processBatch(st,
-            b.as[graft.operators.Sampling.Interaction], id,
-            Int.MaxValue, Int.MaxValue, 42L)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      graft.streaming.StreamingCooc.rescore(st, 10)
+      graft.streaming.StreamingCooc.drain(interactions, Int.MaxValue, Int.MaxValue, 42L, 10)
     })
   )
 

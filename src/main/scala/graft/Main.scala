@@ -2,10 +2,12 @@ package graft
 
 import java.util.concurrent.TimeUnit
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Cooccurrence, Sampling}
+import graft.streaming.StreamingCooc
 
 /**
  * CLI configuration — same surface as the reference's commons-cli config
@@ -61,8 +63,8 @@ object Config {
       // runs the same pipeline through Structured Streaming
       case ("-st" | "--streaming") :: t => go(t, c.copy(streaming = true))
       // durable restart point: Spark's streaming checkpoint (source
-      // offsets) + the pipeline's own cross-batch state snapshots
-      // (StreamingCooc.persistBatch) both live under this directory
+      // offsets) and the pipeline's cross-batch state
+      // (StreamingCooc.Checkpoint) both live under this directory
       case ("-cp" | "--checkpoint") :: v :: t => go(t, c.copy(checkpoint = Some(v)))
       case ("-h" | "--help") :: _ => Left(usage)
       case other :: _ => Left(s"unknown argument: $other\n$usage")
@@ -91,8 +93,9 @@ object Config {
       |monitor, one file per microbatch) instead of the batch planner
       |-cp/--checkpoint: with -st, a killed run restarted with the same
       |checkpoint dir resumes after the last fully-ingested file (exactly
-      |once: offsets via Spark's checkpoint, pipeline state via per-batch
-      |snapshots with commit markers)""".stripMargin
+      |once: offsets via Spark's checkpoint, pipeline state via a log of
+      |per-batch changes under one commit marker each, compacted into
+      |snapshots)""".stripMargin
 }
 
 /**
@@ -101,6 +104,11 @@ object Config {
  * -> LLR top-K per item -> parquet (or stdout sample).
  */
 object Main {
+
+  /** Batches between two compactions of the `-cp` pipeline state: the
+    * default snapshot interval of Spark's own HDFS state store
+    * (`spark.sql.streaming.stateStore.minDeltasForSnapshot`). */
+  private[graft] val CheckpointCompactEvery = 10
 
   /** Parse `user,item,ts` CSV lines (reference InteractionLineSplitter,
     * FlinkCooccurrences.java:207-219) via the codegen'd from_csv path. */
@@ -136,14 +144,16 @@ object Main {
    * role of windows, the repo's established streaming contract
    * (refund-boundary parity oracle-checked by stream_item_cut_refunds).
    * With cuts >= data size this equals the batch result exactly.
+   *
+   * With `-cp`, Spark's offsets and the pipeline state
+   * ([[StreamingCooc.Checkpoint]]) share the checkpoint directory, and a
+   * killed run resumes after its last committed batch.
    */
   def runStreaming(spark: SparkSession, c: Config,
       onBatch: (Long, Boolean) => Unit = (_, _) => ()): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     // the file monitor watches a DIRECTORY; accept a single-file input
     // (same CLI contract as batch) by watching its parent with a name glob
-    val p = new org.apache.hadoop.fs.Path(c.input)
+    val p = new Path(c.input)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val reader = spark.readStream
       .option("maxFilesPerTrigger", "1")
@@ -153,33 +163,20 @@ object Main {
       else reader.option("pathGlobFilter", p.getName).text(p.getParent.toString)
     val inter = parseCsvLines(lines)
       .select(col("user"), col("item"), unix_millis(col("ts")).as("ts"))
-    val st = new graft.streaming.StreamingCooc.State(spark)
-    // -cp: resume the pipeline state to the newest committed batch; ids at
-    // or below `resumedTo` are foreachBatch REPLAYS of work already folded
-    // into the restored state (Spark commits offsets after foreachBatch,
-    // so a kill in that window re-delivers the batch) and must be skipped
-    val resumedTo: Option[Long] = c.checkpoint.flatMap(cp =>
-      graft.streaming.StreamingCooc.restoreState(spark, st, cp))
+    val checkpoint = c.checkpoint.map { cp =>
+      // a directory of the retired layout kept its pipeline state in
+      // graft-state/: resuming it would let Spark's offsets skip every
+      // file already read, against empty state
+      val legacy = new Path(cp, "graft-state")
+      if (legacy.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(legacy))
+        throw new IllegalStateException(s"checkpoint $cp holds pipeline state in the " +
+          s"retired layout ($legacy), which cannot be resumed: its offsets would skip the " +
+          "files already read. Start again with an empty checkpoint directory.")
+      new StreamingCooc.Checkpoint(spark, cp, CheckpointCompactEvery)
+    }
     val (fMax, kMax) =
       if (c.skipCuts) (Int.MaxValue, Int.MaxValue) else (c.itemCut, c.userCut)
-    val writer = inter.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (resumedTo.exists(id <= _)) onBatch(id, false)
-        else {
-          val d = graft.streaming.StreamingCooc.processBatch(st,
-            b.as[Sampling.Interaction], id, fMax, kMax, c.seed)
-          c.checkpoint.foreach(cp =>
-            graft.streaming.StreamingCooc.persistBatch(st, d, cp, id))
-          onBatch(id, true)
-        }
-        ()
-      }
-    c.checkpoint.foreach(cp => writer.option("checkpointLocation", cp))
-    val q = writer.start()
-    q.awaitTermination()
-    graft.streaming.StreamingCooc.rescore(st, c.topK)
+    StreamingCooc.drain(inter, fMax, kMax, c.seed, c.topK, checkpoint, onBatch)
   }
 
   def main(args: Array[String]): Unit = Config.parse(args) match {

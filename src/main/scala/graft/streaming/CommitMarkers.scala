@@ -4,8 +4,9 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, Unsupported
 import org.apache.spark.sql.SparkSession
 
 /**
- * Shared commit-marker protocol for foreachBatch state stores
- * ([[StreamingCooc]] and [[IndexMaintenance]]): a batch is restorable iff
+ * The commit-marker primitives under [[ShardLog]], graft's one
+ * crash-safe commit protocol (every [[MaintainedIndex]] member, the
+ * `-cp` [[StreamingCooc.Checkpoint]] included): a batch is committed iff
  * its `meta/<id>` marker exists, and the marker must APPEAR atomically —
  * including on replay of an already-committed batch, where the old marker
  * is replaced in one step rather than delete-then-rename (r10 advice: the

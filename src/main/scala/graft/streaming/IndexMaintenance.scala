@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -40,11 +39,11 @@ import graft.operators.Dedup
  *  - `delta/<b>/` — the [[ShardLog]] data shards: batch b's MERGE
  *    payload (node, comp, b) — only rows the batch changed or created
  *    (the algo's delta refresh), O(ingest activity), never O(index).
- *  - [[IndexMaintenance.DeltaFold]] — the latest-wins fold semantics:
- *    the snapshot holds one row per node and is anti-joined (broadcast,
- *    never shuffled) against the windowed tail; snapshots carry a `b`
- *    stamp so an empty-delta batch still reads under the explicit
- *    schema.
+ *  - [[IndexMaintenance.DeltaFold]] — the latest-wins fold
+ *    ([[ShardLog.LatestFold]] keyed by node): the snapshot holds one row
+ *    per node and is anti-joined (broadcast, never shuffled) against the
+ *    windowed tail; snapshots carry a `b` stamp so an empty-delta batch
+ *    still reads under the explicit schema.
  *
  * Replay (the [[MaintainedIndex]] guard): a crashed batch rewrites
  * fps/delta in overwrite mode and then commits.
@@ -196,54 +195,9 @@ object IndexMaintenance {
   private[streaming] val deltaSchema = new StructType()
     .add("node", LongType).add("comp", LongType).add("b", LongType)
 
-  private def emptyIndex(spark: SparkSession): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[Row](),
-      new StructType().add("node", LongType).add("comp", LongType))
-
-  /**
-   * Latest-wins DELTA semantics over the shared [[ShardLog]] protocol:
-   * deltas carry their batch id as a stored column so the tail fold is
-   * ONE multi-path FileScan + window, and the snapshot (one row per
-   * node) is anti-joined against the tail's node set — broadcast, never
-   * an O(index) exchange (r12 verdict #2: the old shape ran the
-   * row_number window over snapshot ∪ tail, a full-index shuffle on
-   * every batch). Explicit broadcast: the tail is bounded by
-   * compactEvery batches of deltas (each O(ingest activity)) —
-   * structurally small — while file-size stats alone would leave the
-   * planner free to pick a sort-merge join and re-shuffle the snapshot.
-   */
-  private[streaming] object DeltaFold extends ShardLog.Fold {
-    def rows(spark: SparkSession, snapshot: Option[String],
-        tail: Seq[(Long, String)]): DataFrame = {
-      // explicit schema: a batch whose delta is EMPTY (no new pairs) is
-      // legal, and schema inference over an empty parquet dir would fail
-      def read(paths: Seq[String]): DataFrame =
-        spark.read.schema(deltaSchema).parquet(paths: _*)
-      // latest-wins over the delta TAIL only — O(recent activity), never
-      // O(index); tail deltas all carry b > the snapshot's batch id
-      val tailFold = Option(tail).filter(_.nonEmpty).map { t =>
-        val w = Window.partitionBy(col("node")).orderBy(col("b").desc)
-        read(t.map(_._2))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .select(col("node"), col("comp"))
-      }
-      val snap = snapshot.map(p => read(Seq(p)).select(col("node"), col("comp")))
-      (snap, tailFold) match {
-        case (Some(s), None) => s
-        case (None, Some(t)) => t
-        case (None, None) => empty(spark) // unreachable: ShardLog guards
-        case (Some(s), Some(t)) =>
-          s.join(broadcast(t.select(col("node"))), Seq("node"), "left_anti")
-            .unionByName(t)
-      }
-    }
-    // the `b` stamp keeps the snapshot readable under deltaSchema (and an
-    // all-columns multi-path read with later tail deltas well-typed)
-    override def snapshotRows(rows: DataFrame, upTo: Long): DataFrame =
-      rows.select(col("node"), col("comp")).withColumn("b", lit(upTo))
-    override def empty(spark: SparkSession): DataFrame = emptyIndex(spark)
-  }
+  /** Latest-wins per node: a batch's delta holds only the rows it
+    * changed or created. */
+  private[streaming] val DeltaFold = new ShardLog.LatestFold("node", deltaSchema)
 
   /**
    * Stored-column strategy for the maintenance loop: how a batch's docs

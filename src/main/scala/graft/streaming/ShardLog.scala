@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
+import org.apache.spark.sql.types.StructType
 
 /**
  * The crash-safe PER-BATCH SHARD LOG shared by the standing-index
@@ -35,7 +37,7 @@ import org.apache.spark.sql.functions.col
  *
  * How each relation's standing rows FOLD out of (snapshot, shard tail) is
  * pluggable ([[ShardLog.Fold]]): append (one multi-path scan — snapshot
- * and shards share a schema), latest-wins deltas ([[IndexMaintenance]]),
+ * and shards share a schema), latest-wins ([[ShardLog.LatestFold]]),
  * sum-merge ([[ShardLog.SumFold]]). The log owns the PROTOCOL — markers,
  * rollup, compaction ordering, sweeps — exactly once for every member.
  *
@@ -434,5 +436,53 @@ private[streaming] object ShardLog {
       rows.groupBy(keys.map(col): _*)
         .agg(org.apache.spark.sql.functions.sum(col(cnt)).as(cnt))
         .where(col(cnt) =!= 0)
+  }
+
+  /**
+   * LATEST-WINS semantics: a shard holds the new value of each key its
+   * batch touched, stamped with the batch id in a `b` column, and a
+   * key's standing row is its newest one. `schema` is the stored schema
+   * (`key`, the value columns, then `b`); reads declare it, so a batch
+   * that touched no key is a legal empty shard. The tail fold is ONE
+   * multi-path FileScan + window, and the snapshot (one row per key) is
+   * anti-joined against the tail's key set — broadcast, never an
+   * O(standing) exchange (r12 verdict #2: a row_number window over
+   * snapshot ∪ tail shuffled every standing row on every read).
+   * Explicit broadcast: the tail is bounded by compactEvery batches of
+   * touched keys — structurally small — while file-size stats alone
+   * would leave the planner free to pick a sort-merge join and
+   * re-shuffle the snapshot.
+   */
+  final class LatestFold(key: String, schema: StructType) extends Fold {
+    private val served = schema.fieldNames.filter(_ != "b").map(col).toSeq
+
+    def rows(spark: SparkSession, snapshot: Option[String],
+        tail: Seq[(Long, String)]): DataFrame = {
+      def read(paths: Seq[String]): DataFrame = spark.read.schema(schema).parquet(paths: _*)
+      // latest-wins over the TAIL only — O(recent activity); tail rows
+      // all carry b > the snapshot's batch id
+      val tailFold = Option(tail).filter(_.nonEmpty).map { t =>
+        val w = Window.partitionBy(col(key)).orderBy(col("b").desc)
+        read(t.map(_._2))
+          .withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1)
+          .select(served: _*)
+      }
+      val snap = snapshot.map(p => read(Seq(p)).select(served: _*))
+      (snap, tailFold) match {
+        case (Some(s), None) => s
+        case (None, Some(t)) => t
+        case (None, None) => empty(spark) // unreachable: ShardLog guards
+        case (Some(s), Some(t)) =>
+          s.join(broadcast(t.select(col(key))), Seq(key), "left_anti").unionByName(t)
+      }
+    }
+    // the `b` stamp keeps the snapshot readable under `schema` (and an
+    // all-columns multi-path read with later tail shards well-typed)
+    override def snapshotRows(rows: DataFrame, upTo: Long): DataFrame =
+      rows.select(served: _*).withColumn("b", lit(upTo))
+    override def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(schema.filter(_.name != "b")))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StatsBridge
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{IntDoubleTopK, LogLikelihood}
 import graft.operators.Sampling
@@ -27,18 +27,21 @@ import graft.operators.Sampling.{CoocDelta, Interaction, ItemCount, UserState}
  * cross-input ordering invariant, trivial under microbatch sequencing).
  *
  * This is SURVEY §7.0's design stance realized: the batch-proven window
- * step lifted into a foreachBatch shell, with refunds applied
- * synchronously inside each batch (exact, unlike the Flink in-JVM queue).
+ * step lifted into one foreachBatch shell ([[drain]]), with refunds
+ * applied synchronously inside each batch (exact, unlike the Flink
+ * in-JVM queue). A [[Checkpoint]] makes the shell's state durable on the
+ * maintainers' [[ShardLog]] protocol, so a killed run resumes exactly
+ * once.
  */
 object StreamingCooc {
 
   /** Mutable cross-batch state for one streaming pipeline instance. The
     * keyed state stays co-partitioned RDDs (width: the session's
-    * shuffle.partitions); `itemState`, `userState` and `deltas` are
-    * Dataset views of it, and assigning one replaces that state. */
+    * shuffle.partitions); `deltas` is a Dataset view of the accumulated
+    * increments, and assigning it replaces them. */
   final class State(private[streaming] val spark: SparkSession) {
     import spark.implicits._
-    private[streaming] val window = new Sampling.WindowState(spark.sparkContext,
+    private[graft] val window = new Sampling.WindowState(spark.sparkContext,
       new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt))
     /** One cached delta increment per batch (netted per user, not across
       * users), kept as internal rows of `deltaSchema`: rescore nets them
@@ -46,17 +49,10 @@ object StreamingCooc {
     private[streaming] val increments = ArrayBuffer[RDD[InternalRow]]()
     /** Event-time watermark after the previous batch (max ts seen). Late
       * filtering uses the PREVIOUS batch's value — the same split Spark's
-      * own watermark operators apply to multi-batch late data. */
+      * own watermark operators apply to multi-batch late data. Kept in
+      * memory only: a restored state starts from no watermark. */
     var watermarkMs: Long = Long.MinValue
 
-    def itemState: Dataset[ItemCount] =
-      spark.createDataset(window.itemCnt.map { case (i, c) => ItemCount(i.toInt, c) })
-    def itemState_=(ds: Dataset[ItemCount]): Unit =
-      window.itemCnt = ds.rdd.map(c => (c.item.toLong, c.cnt)).partitionBy(window.part)
-    def userState: Dataset[UserState] =
-      spark.createDataset(window.userSt.map { case (u, (t, h)) => UserState(u.toInt, t, h) })
-    def userState_=(ds: Dataset[UserState]): Unit =
-      window.userSt = ds.rdd.map(u => (u.user.toLong, (u.total, u.history))).partitionBy(window.part)
     /** The accumulated matrix as its un-netted delta rows. */
     def deltas: Dataset[CoocDelta] = StatsBridge.fromRows(spark, deltaRows, deltaSchema).as[CoocDelta]
     private[streaming] def deltaRows: RDD[InternalRow] =
@@ -71,9 +67,7 @@ object StreamingCooc {
 
   /**
    * Run one microbatch through the window step and keep its delta
-   * increment in `st`. Returns this batch's NET increment (netted across
-   * users) — lazy over the cached increment, so only a caller that reads
-   * it (persistBatch) pays its small aggregation job.
+   * increment in `st`.
    *
    * One Spark job per batch (Sampling.WindowState.step), plus one with
    * `metrics` attached: the reference's late-element contract is
@@ -89,7 +83,7 @@ object StreamingCooc {
    */
   def processBatch(st: State, batch: Dataset[Interaction], batchId: Long,
       fMax: Int, kMax: Int, seed: Long,
-      metrics: Option[Sampling.PipelineMetrics] = None): Dataset[CoocDelta] = {
+      metrics: Option[Sampling.PipelineMetrics] = None): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val admitted = metrics match {
@@ -111,103 +105,119 @@ object StreamingCooc {
         }
         batch.filter(col("ts") > wm)
     }
-    val inc = st.window.step(admitted, fMax, kMax, seed, batchId, metrics)(_.flatMap {
+    st.increments += st.window.step(admitted, fMax, kMax, seed, batchId, metrics)(_.flatMap {
       case (_, r) =>
         if (r.kind == 0) Iterator.single(InternalRow(r.item, r.other, r.inc)) else Iterator.empty
     })
-    st.increments += inc
-    StatsBridge.fromRows(spark, inc, deltaSchema)
-      .groupBy(col("item"), col("other"))
-      .agg(sum(col("inc")).cast("int").as("inc"))
-      .where(col("inc") =!= 0)
-      .as[CoocDelta]
   }
 
-  // ---------------------------------------------------------------------
-  // Durable cross-restart state (checkpointed CLI runs, Main -st -cp).
-  //
-  // Spark's streaming checkpoint persists SOURCE offsets; the pipeline's
-  // cross-batch state (item counts, user reservoirs, accumulated delta
-  // matrix) lives in `State`, so a killed run would otherwise resume the
-  // file monitor against empty state. Layout under <ckpt>/graft-state:
-  //
-  //   delta/id=<b>/   this batch's NET delta increment (O(batch), not
-  //                   O(accumulated matrix) — the matrix is reconstructed
-  //                   on restore as the union of all committed increments)
-  //   items/<b>/      post-batch item-count state (bounded by #items)
-  //   users/<b>/      post-batch user-reservoir state (bounded by #users)
-  //   meta/<b>        COMMIT MARKER, written last: a batch is restorable
-  //                   iff its meta file exists; partial writes from a
-  //                   crash are overwritten on replay (mode=overwrite)
-  //
-  // Exactly-once under foreachBatch replay: Spark commits source offsets
-  // AFTER foreachBatch returns, so a crash can leave batch b persisted
-  // here but uncommitted there. On restart the caller restores to the
-  // newest meta and SKIPS replayed batch ids <= that watermark — the
-  // standard idempotent-foreachBatch protocol, expressed at the CLI
-  // layer the reference's checkpointable monitor exposes
-  // (ContinuousFileMonitoringFunction.java snapshotState/restoreState).
-  // ---------------------------------------------------------------------
+  /**
+   * The durable state of a checkpointed drain (`Main -st -cp <dir>`), on
+   * the maintainers' crash-safe [[ShardLog]] protocol
+   * ([[MaintainedIndex]]). Spark's checkpoint in `dir` keeps the SOURCE
+   * offsets; this member keeps the rest of what a resumed run needs —
+   * item counts, user reservoirs, the accumulated matrix — under
+   * `dir/graft-log`. Each batch commits three relations under one
+   * marker, each O(batch):
+   *  - `delta`: the batch's increment, sum-merged ([[ShardLog.SumFold]]);
+   *    a compaction nets it;
+   *  - `items`: the post-batch count of each of the batch's items — a
+   *    count moves only through the batch's own events and refunds, and
+   *    every refunded item is one of the batch's items;
+   *  - `users`: the post-batch reservoir of each of the batch's users.
+   * `items` and `users` are latest-wins ([[ShardLog.LatestFold]]); a
+   * compaction every `compactEvery` batches folds all three into
+   * snapshots (the delta-files-plus-snapshots scheme of Spark's own HDFS
+   * state store).
+   *
+   * Exactly-once under foreachBatch replay: Spark commits its offsets
+   * AFTER foreachBatch returns, so a kill can leave batch b committed
+   * here but not there. [[drain]] skips a batch id exactly when
+   * [[isCommitted]] — replay by id, the role of the reference's
+   * checkpointable monitor (ContinuousFileMonitoringFunction.java
+   * snapshotState/restoreState).
+   */
+  final class Checkpoint(spark: SparkSession, val dir: String, compactEvery: Int)
+    extends MaintainedIndex(spark, s"$dir/graft-log", compactEvery,
+      Seq(Checkpoint.delta, Checkpoint.items, Checkpoint.users)) {
 
-  private def stateRoot(checkpoint: String) = s"$checkpoint/graft-state"
-
-  /** Persist batch `id`'s delta increment + post-batch state tables,
-    * then the commit marker (watermark inside). Overwrite mode makes a
-    * replayed half-written batch self-healing. */
-  def persistBatch(st: State, d: Dataset[CoocDelta], checkpoint: String, id: Long): Unit = {
-    val root = stateRoot(checkpoint)
-    d.write.mode("overwrite").parquet(s"$root/delta/id=$id")
-    st.itemState.write.mode("overwrite").parquet(s"$root/items/$id")
-    st.userState.write.mode("overwrite").parquet(s"$root/users/$id")
-    // the marker must APPEAR atomically: a kill mid-create would otherwise
-    // leave a partial/empty meta/<id> that a restore could pick as "newest
-    // committed" — CommitMarkers.commit writes a dot-prefixed temp sibling
-    // and atomically renames it into place, even when replaying an
-    // already-committed batch. restoreState additionally ignores
-    // unparsable markers as a second line of defence.
-    CommitMarkers.commit(d.sparkSession,
-      new org.apache.hadoop.fs.Path(s"$root/meta"), id,
-      s"""{"watermarkMs":${st.watermarkMs}}""")
-  }
-
-  /** Restore `st` to the newest committed batch under `checkpoint`.
-    * Returns that batch id (the replay watermark: the caller must skip
-    * foreachBatch invocations with id <= it), or None for a fresh start. */
-  def restoreState(spark: SparkSession, st: State, checkpoint: String): Option[Long] = {
     import spark.implicits._
-    val root = stateRoot(checkpoint)
-    val metaDir = new org.apache.hadoop.fs.Path(s"$root/meta")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = CommitMarkers.committed(spark, metaDir)
-    if (committed.isEmpty) return None
-    // Markers are written via temp+rename (atomic), but stay defensive: a
-    // marker that exists yet doesn't parse is treated as UNCOMMITTED and we
-    // fall back to the next-newest — the crash-tolerance contract is
-    // "resume from the last good commit", never "refuse to resume".
-    def readWatermark(id: Long): Option[Long] = {
-      val json = scala.util.Try {
-        val in = fs.open(new org.apache.hadoop.fs.Path(s"$root/meta/$id"))
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      }.getOrElse("")
-      """"watermarkMs":(-?\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
+
+    /** A fresh [[State]] holding every committed batch. Its RDDs are
+      * materialized here: a later compaction may sweep the files read. */
+    def restore(): State = {
+      val st = new State(spark)
+      if (committedCount > 0) {
+        def pinned[T](rdd: RDD[T]): RDD[T] = { rdd.localCheckpoint(); rdd.count(); rdd }
+        st.window.itemCnt = pinned(log.currentRows(Checkpoint.items).as[ItemCount].rdd
+          .map(c => (c.item.toLong, c.cnt)).partitionBy(st.window.part))
+        st.window.userSt = pinned(log.currentRows(Checkpoint.users).as[UserState].rdd
+          .map(u => (u.user.toLong, (u.total, u.history))).partitionBy(st.window.part))
+        st.increments += pinned(log.currentRows(Checkpoint.delta).rdd
+          .map(r => InternalRow(r.getInt(0), r.getInt(1), r.getLong(2).toInt)))
+      }
+      st
     }
-    val resolved = committed.sorted(Ordering[Long].reverse).iterator
-      .map(id => (id, readWatermark(id)))
-      .collectFirst { case (id, Some(wm)) => (id, wm) }
-    if (resolved.isEmpty) return None
-    val (last, wm) = resolved.get
-    st.watermarkMs = wm
-    st.itemState = spark.read.parquet(s"$root/items/$last").as[ItemCount]
-    st.userState = spark.read.parquet(s"$root/users/$last").as[UserState]
-    // partition discovery over delta/id=N gives the id column back; only
-    // COMMITTED increments participate (a crash can leave id dirs past
-    // the newest meta — they will be overwritten on replay)
-    st.deltas = spark.read.parquet(s"$root/delta")
-      .where(col("id") <= last)
-      .select(col("item").cast("int"), col("other").cast("int"), col("inc").cast("int"))
-      .as[CoocDelta]
-      .localCheckpoint(true)
-    Some(last)
+
+    /** Commit batch `id`, which [[processBatch]] has just folded into
+      * `st` from `batch`. A committed id returns at once. */
+    def commit(id: Long, st: State, batch: Dataset[Interaction]): Unit = once(id) {
+      val w = st.window
+      // the batch's keys, partitioned like the state: the joins below
+      // shuffle only these
+      def keys(key: Interaction => Int) =
+        batch.rdd.map(e => (key(e).toLong, ())).reduceByKey(w.part, (a, _) => a)
+      val items = w.itemCnt.join(keys(_.item), w.part)
+        .map { case (i, (c, _)) => ItemCount(i.toInt, c) }
+      val users = w.userSt.join(keys(_.user), w.part)
+        .map { case (u, ((t, h), _)) => UserState(u.toInt, t, h) }
+      log.commitShard(id, Seq(
+        // the snapshot's netted sums are bigint: every delta file is too
+        StatsBridge.fromRows(spark, st.increments.last, deltaSchema)
+          .withColumn("inc", col("inc").cast(LongType)),
+        items.toDF().withColumn("b", lit(id)),
+        users.toDF().withColumn("b", lit(id))), "{}")
+    }
+  }
+
+  object Checkpoint {
+    private def latest(key: String, schema: StructType) = ShardLog.Relation("shards",
+      new ShardLog.LatestFold(key, schema.add("b", LongType)), s"${key}s")
+    private val delta = ShardLog.Relation("shards",
+      new ShardLog.SumFold(Seq("item", "other"), "inc"), "delta")
+    private val items = latest("item", Encoders.product[ItemCount].schema)
+    private val users = latest("user", Encoders.product[UserState].schema)
+  }
+
+  /**
+   * The foreachBatch drain shell: `inter` — a stream of `(user, item,
+   * ts)` interactions — runs through [[processBatch]] one microbatch at
+   * a time until the source is drained (AvailableNow), then [[rescore]]
+   * keeps each item's top `k`. With a `checkpoint` the state is restored
+   * from it, every batch commits to it, Spark keeps its offsets in
+   * `checkpoint.dir`, and a batch id the checkpoint already holds is
+   * skipped: a replay of work already in the restored state.
+   * `onBatch(id, processed)` runs after each batch.
+   */
+  def drain(inter: DataFrame, fMax: Int, kMax: Int, seed: Long, k: Int,
+      checkpoint: Option[Checkpoint] = None,
+      onBatch: (Long, Boolean) => Unit = (_, _) => ()): DataFrame = {
+    val spark = inter.sparkSession
+    import spark.implicits._
+    val st = checkpoint.fold(new State(spark))(_.restore())
+    val writer = inter.writeStream.outputMode(OutputMode.Update()).trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        if (checkpoint.exists(_.isCommitted(id))) onBatch(id, false)
+        else {
+          val batch = b.as[Interaction]
+          processBatch(st, batch, id, fMax, kMax, seed)
+          checkpoint.foreach(_.commit(id, st, batch))
+          onBatch(id, true)
+        }
+      }
+    checkpoint.foreach(c => writer.option("checkpointLocation", c.dir))
+    writer.start().awaitTermination()
+    rescore(st, k)
   }
 
   /** Partitions packed `(item << 32 | other)` cell keys by item. */
@@ -336,23 +346,10 @@ object StreamingCooc {
    * result equals the batch pipeline exactly (same oracle).
    */
   def llrTopKStreaming(spark: SparkSession, dir: String, fMax: Int, kMax: Int,
-      seed: Long, k: Int): DataFrame = {
-    import spark.implicits._
-    val st = new State(spark)
-    val stream = StreamingOps.eventsStream(spark, dir)
+      seed: Long, k: Int): DataFrame =
+    drain(StreamingOps.eventsStream(spark, dir)
       .select(
         col("user_id").cast("int").as("user"),
         get_json_object(col("props"), "$.k").cast("int").as("item"),
-        unix_millis(col("ts")).as("ts"))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        processBatch(st, batchDf.as[Interaction], batchId, fMax, kMax, seed)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    rescore(st, k)
-  }
+        unix_millis(col("ts")).as("ts")), fMax, kMax, seed, k)
 }

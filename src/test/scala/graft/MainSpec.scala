@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -153,38 +151,79 @@ class MainSpec extends AnyFunSuite with BeforeAndAfterAll {
       "kill+resume must equal the uninterrupted run (sampled path, same seed)")
   }
 
-  test("corrupt newest commit marker: restore falls back to the last parsable commit") {
-    // Build a committed checkpoint (4 files -> batches 0..3, one marker
-    // each), then truncate the NEWEST marker to empty — the shape a kill
-    // leaves behind if the atomic-rename protocol is ever bypassed.
-    // Restore must treat it as uncommitted and fall back to batch 2, not
-    // throw and permanently block resume (r9 advice item 1).
-    val lines = (1 to 12).flatMap(u => (1 to 4).map(i => s"$u,${i % 3},${u * 1000 + i * 10}"))
-    val dir = Files.createTempDirectory("graft_corrupt").toFile
-    lines.grouped(lines.size / 4 + 1).zipWithIndex.foreach { case (chunk, idx) =>
+  /** `files` CSV files of `lines` with distinct mod-times: one
+    * deterministic microbatch each under maxFilesPerTrigger=1. */
+  private def csvDir(prefix: String, lines: Seq[String], files: Int): java.io.File = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    lines.grouped((lines.size + files - 1) / files).zipWithIndex.foreach { case (chunk, idx) =>
       val f = new java.io.File(dir, f"part$idx%02d.csv")
       Files.write(f.toPath, chunk.mkString("\n").getBytes)
       assert(f.setLastModified(1700000000000L + idx * 60000L))
     }
+    dir
+  }
+
+  private def streamCfg(dir: java.io.File, ckpt: String, cuts: String*): Config =
+    Config.parse(Array("-i", dir.getAbsolutePath, "-st", "-cp", ckpt,
+      "-ws", "1", "-wu", "HOURS", "-s", "42") ++ cuts).toOption.get
+
+  private def topK(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSet
+
+  test("-st -cp: a kill after the first compacting batch resumes from the snapshot " +
+      "to the uninterrupted result") {
+    val batches = Main.CheckpointCompactEvery + 2
+    val lines = (1 to 40).flatMap(u => (1 to 6).map(i => s"$u,${(u + i) % 7},${u * 1000 + i * 10}"))
+    val dir = csvDir("graft_resume_compact", lines, batches)
+    val cuts = Seq("-ic", "15", "-uc", "2")
+    val expected = topK(Main.runStreaming(spark,
+      streamCfg(dir, Files.createTempDirectory("graft_ckpt_ref").toString, cuts: _*)))
+    // the first compaction runs inside the commit of batch compactEvery-1
+    val compacting = Main.CheckpointCompactEvery - 1L
+    val ckpt = Files.createTempDirectory("graft_ckpt_compact").toString
+    intercept[Exception] {
+      Main.runStreaming(spark, streamCfg(dir, ckpt, cuts: _*), onBatch = (id, _) =>
+        if (id == compacting) throw new RuntimeException("injected kill"))
+    }
+    assert(new java.io.File(ckpt, s"graft-log/basemeta/$compacting").exists,
+      "the killed run must have compacted before the kill")
+    val seen = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
+    val resumed = topK(Main.runStreaming(spark, streamCfg(dir, ckpt, cuts: _*),
+      onBatch = (id, processed) => seen.synchronized { seen += id -> processed; () }))
+    assert(seen.toList == (compacting -> false) +:
+      (compacting + 1 until batches).map(_ -> true).toList, s"$seen")
+    assert(resumed == expected)
+  }
+
+  test("-st -cp: an emptied newest commit marker still resumes to the uninterrupted result") {
+    // a batch is committed exactly when its marker exists; the marker's
+    // content is never parsed, so an empty one still commits its batch
+    val lines = (1 to 12).flatMap(u => (1 to 4).map(i => s"$u,${i % 3},${u * 1000 + i * 10}"))
+    val dir = csvDir("graft_corrupt", lines, 4)
     val ckpt = Files.createTempDirectory("graft_ckpt_corrupt").toString
-    val full = Main.runStreaming(spark, Config.parse(Array(
-      "-i", dir.getAbsolutePath, "-st", "-cp", ckpt,
-      "-ws", "1", "-wu", "HOURS", "-sc", "-k", "5")).toOption.get)
-    assert(full.count() > 0)
-    val metaDir = java.nio.file.Paths.get(ckpt, "graft-state", "meta")
-    val ids = java.nio.file.Files.list(metaDir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.forall(_.isDigit)).map(_.toLong).toSeq.sorted
-    assert(ids == Seq(0L, 1L, 2L, 3L), s"expected markers 0..3, got $ids")
-    Files.write(metaDir.resolve("3"), Array.empty[Byte]) // truncate newest
-    val st = new graft.streaming.StreamingCooc.State(spark)
-    val restored = graft.streaming.StreamingCooc.restoreState(spark, st, ckpt)
-    assert(restored.contains(2L),
-      s"restore must skip the unparsable marker 3 and land on 2, got $restored")
-    // and a checkpoint whose ONLY marker is corrupt restores to fresh-start
-    Seq("0", "1", "2").foreach(id => java.nio.file.Files.delete(metaDir.resolve(id)))
-    val st2 = new graft.streaming.StreamingCooc.State(spark)
-    assert(graft.streaming.StreamingCooc.restoreState(spark, st2, ckpt).isEmpty,
-      "all-corrupt markers must mean fresh start, not a crash")
+    val full = topK(Main.runStreaming(spark, streamCfg(dir, ckpt, "-sc", "-k", "5")))
+    assert(full.nonEmpty)
+    val newest = java.nio.file.Paths.get(ckpt, "graft-log", "meta", "3")
+    assert(Files.exists(newest))
+    Files.write(newest, Array.empty[Byte])
+    val seen = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
+    val resumed = topK(Main.runStreaming(spark, streamCfg(dir, ckpt, "-sc", "-k", "5"),
+      onBatch = (id, processed) => seen.synchronized { seen += id -> processed; () }))
+    assert(seen.forall(!_._2), s"every batch was committed before the marker was emptied: $seen")
+    assert(resumed == full)
+  }
+
+  test("-st -cp: a checkpoint of the retired graft-state layout is refused, not resumed") {
+    val dir = csvDir("graft_legacy", Seq("1,10,1000", "1,20,2000", "2,10,3000"), 1)
+    val ckpt = Files.createTempDirectory("graft_ckpt_legacy")
+    Files.createDirectories(ckpt.resolve("graft-state/meta"))
+    Files.write(ckpt.resolve("graft-state/meta/0"), """{"watermarkMs":0}""".getBytes)
+    val e = intercept[IllegalStateException] {
+      Main.runStreaming(spark, streamCfg(dir, ckpt.toString, "-sc"))
+    }
+    assert(e.getMessage.contains("retired layout") && e.getMessage.contains("graft-state"),
+      e.getMessage)
+    assert(!Files.exists(ckpt.resolve("graft-log")), "nothing may be written beside it")
   }
 
   test("sampled mode from CLI runs and respects cuts") {

@@ -13,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.operators.Sampling
+import graft.operators.Sampling.Interaction
 import graft.streaming.{AnnMaintenance, CoocMaintenance, IndexMaintenance, IvfPqMaintenance,
-  KnnGraphMaintenance, LexicalIndexMaintenance, SqMaintenance}
+  KnnGraphMaintenance, LexicalIndexMaintenance, SqMaintenance, StreamingCooc}
 
 /**
  * Test-only fault injection: the local file system under the `crashfs`
@@ -349,6 +351,49 @@ class ShardLogCrashSpec extends AnyFunSuite with BeforeAndAfterAll {
           else m.refitBatch(b, vectors)
         def serve(): Seq[String] = rows(m.currentGraph())
         def isCommitted(b: Long): Boolean = m.isCommitted(b)
+      }
+    }
+  }
+
+  test("StreamingCooc.Checkpoint: every crash point of a plain batch and of a " +
+      "batch whose compaction runs the deferred sweep resumes to a clean drain") {
+    val session = spark; import session.implicits._
+    // 5 users over 6 items, 3 events each per batch, timestamps rising
+    // across batches; with fMax = 4 and kMax = 2 the item cut drops, full
+    // reservoirs replace, and sampled events a reservoir declines refund
+    val events = (0 until 4).map { b =>
+      (0 until 5).flatMap(u => (0 until 3).map(j =>
+        Interaction(u, (u + 2 * j + b) % 6, b * 100L + u * 10 + j)))
+    }
+    val (fMax, kMax) = (4, 2)
+    val probe = new StreamingCooc.State(spark)
+    val m = new Sampling.PipelineMetrics(spark.sparkContext)
+    events.zipWithIndex.foreach { case (ev, b) =>
+      StreamingCooc.processBatch(probe, ev.toDS(), b, fMax, kMax, 42L, Some(m))
+    }
+    assert(m.droppedInteractions.value > 0 && m.feedbackElements.value > 0,
+      s"dropped ${m.droppedInteractions.value}, refunded ${m.feedbackElements.value}")
+    assert(probe.deltas.where(org.apache.spark.sql.functions.col("inc") < 0).count() > 0,
+      "no reservoir replaced")
+    // compactEvery = 2: batch 2 is plain; batch 3 compacts (count 4) and
+    // sweeps what the compaction at batch 1 covered
+    val relations = Seq("delta", "items", "users")
+    enumerate("checkpoint", 4, Seq(2, 3), Seq(Log("graft-log",
+        relations.map(r => s"$r/shards"), relations.map(r => s"$r/base")))) { root =>
+      val cp = new StreamingCooc.Checkpoint(spark, root, compactEvery = 2)
+      val st = cp.restore()
+      new Member {
+        def run(b: Int): Unit = if (!cp.isCommitted(b)) {
+          val batch = events(b).toDS()
+          StreamingCooc.processBatch(st, batch, b, fMax, kMax, 42L)
+          cp.commit(b, st, batch)
+        }
+        def serve(): Seq[String] =
+          st.window.itemCnt.collect().map { case (i, c) => s"item $i $c" }.toSeq.sorted ++
+            st.window.userSt.collect()
+              .map { case (u, (t, h)) => s"user $u $t ${h.mkString(",")}" }.toSeq.sorted ++
+            rows(st.deltas.groupBy("item", "other").sum("inc").where("`sum(inc)` != 0"))
+        def isCommitted(b: Long): Boolean = cp.isCommitted(b)
       }
     }
   }
